@@ -6542,7 +6542,7 @@ def _corr_oracle(table: str, cols: list[str], quant: int = 6,
     range sums (Σx, Σy, n) cast through BIGINT first: int64→double is
     hardware-correctly-rounded everywhere, unlike HUGEINT paths.
     Spark runs the same split in decimal(38,0)
-    (operators/stats.py::_det_double)."""
+    (operators/stats.py::_det_double_sql)."""
     pairs = pairs or [(cols[i], cols[j]) for i in range(len(cols))
                       for j in range(i + 1, len(cols))]
     m = 2147483648  # 2^31 — the hi/lo split base

@@ -43,11 +43,6 @@ def _cast_for(name: str, counts, tv: list[str], fv: list[str]) -> Column | None:
     return None
 
 
-def inferred_cast(sdf: SparkDF, name: str, **kw) -> Column | None:
-    """Return a cast expression for column ``name`` or None to keep string."""
-    return inferred_casts(sdf, [name], **kw).get(name)
-
-
 def inferred_casts(sdf: SparkDF, names: list[str],
                    true_values: list[str] | None = None,
                    false_values: list[str] | None = None) -> dict[str, Column]:

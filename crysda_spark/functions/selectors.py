@@ -47,10 +47,6 @@ def list_of(*cols: str) -> Selector:
     return lambda names: [(n in wanted) or None for n in names]
 
 
-def all_cols() -> Selector:
-    return lambda names: [True for _ in names]
-
-
 def range_(start: str, end: str) -> Selector:
     def sel(names: list[str]) -> list[bool | None]:
         i, j = names.index(start), names.index(end)

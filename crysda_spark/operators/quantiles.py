@@ -63,13 +63,12 @@ _RESERVED = {"_v", "_b", "_c", "_off", "_rank", "_lrn", "_frac", "_kind",
 
 
 def _null_safe_join(left: DataFrame, right: DataFrame, keys: list[str],
-                    extra=None, how: str = "inner") -> DataFrame:
-    """Broadcast join on keys that must not drop NULL group keys
+                    extra=None) -> DataFrame:
+    """Broadcast inner join on keys that must not drop NULL group keys
     (groupBy treats NULL as a regular key; a plain equi-join would).
     Right-side keys are renamed before the join so the output resolves
     unambiguously. ``extra`` appends a non-equi condition (used for the
-    rank-range containment join). ``how='left_semi'`` filters the left
-    side (duplicate right rows cannot multiply it)."""
+    rank-range containment join)."""
     renamed = right
     for k in keys:
         renamed = renamed.withColumnRenamed(k, f"__r_{k}")
@@ -77,10 +76,8 @@ def _null_safe_join(left: DataFrame, right: DataFrame, keys: list[str],
     for k in keys:
         c = left[k].eqNullSafe(F.col(f"__r_{k}"))
         cond = c if cond is None else cond & c
-    out = left.join(F.broadcast(renamed), cond, how)
-    if how == "left_semi":
-        return out
-    return out.drop(*[f"__r_{k}" for k in keys])
+    return (left.join(F.broadcast(renamed), cond)
+            .drop(*[f"__r_{k}" for k in keys]))
 
 
 def approx_split_bounds(sdf: DataFrame, value_col: str,

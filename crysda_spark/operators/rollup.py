@@ -28,17 +28,6 @@ from ..frame import Frame
 
 GRAINS = ("minute", "hour", "day", "week", "month", "quarter", "year")
 
-_IDENT_RE = __import__("re").compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
-
-
-def _plain_ident(name: str) -> bool:
-    """True when ``name`` can be safely backtick-quoted into generated
-    SQL as a single top-level column. Dotted struct refs ('s.price')
-    and names containing backticks must go through F.col instead —
-    backticking them either breaks the parse or silently changes what
-    they resolve to (r15 advice)."""
-    return bool(_IDENT_RE.match(name))
-
 # kind -> (fine-grain aggregate over the raw column,
 #          merge aggregate over the fine-grain partial)
 _KINDS: dict[str, tuple] = {
@@ -314,38 +303,22 @@ def _hist_spec(name: str, spec) -> tuple:
     return col, float(lo), float(hi), nbins
 
 
-def _hist_fine(col, lo: float, hi: float, nbins: int) -> Column:
-    """Fixed-boundary histogram aggregate: array<long> of bin counts.
-    Values clamp into the edge bins (below lo → bin 0, at/above hi →
-    bin nbins-1); nulls are not counted."""
+def _hist_fine(col: str, lo: float, hi: float, nbins: int) -> Column:
+    """Fixed-boundary histogram aggregate over the plain column ``col``
+    (``fine_measure_exprs`` projects every input to one): array<long>
+    of bin counts. Values clamp into the edge bins (below lo → bin 0,
+    at/above hi → bin nbins-1); nulls are not counted. Built as ONE
+    parsed expression (see _cms_fine); the idx CASE is explicit about
+    nulls because greatest/least ignore them (a null value would
+    otherwise clamp into bin 0), null = i is null, and if() treats null
+    as false -> 0."""
     width = (hi - lo) / nbins
-    if isinstance(col, str) and not _plain_ident(col):
-        # r15 advice: a name that is not a plain identifier (dotted
-        # struct ref like 's.price', or containing a backtick) breaks
-        # or silently changes meaning inside the generated SQL — route
-        # it through F.col, which resolves it like the old builder did
-        col = F.col(col)
-    if isinstance(col, str):
-        # generated-SQL path — see _cms_fine (r15 optimization round):
-        # one parsed expression instead of ~5 py4j round trips per bin.
-        # Identical tree: the idx CASE is null when the value is null
-        # (greatest/least ignore nulls, so the gate stays explicit),
-        # null = i is null, and if() treats null as false -> 0.
-        idx = (f"(case when `{col}` is not null then "
-               f"least(greatest(cast(floor((`{col}` - {float(lo)!r}D) / "
-               f"{float(width)!r}D) as int), 0), {nbins - 1}) end)")
-        cells = ", ".join(
-            f"sum(cast(if({idx} = {i}, 1, 0) as bigint))"
-            for i in range(nbins))
-        return F.expr(f"array({cells})")
-    c = col
-    # greatest/least IGNORE nulls (they don't propagate them), so a null
-    # value would silently clamp into bin 0 — gate on isNotNull first
-    idx = F.when(c.isNotNull(),
-                 F.least(F.greatest(F.floor((c - lo) / width).cast("int"),
-                                    F.lit(0)), F.lit(nbins - 1)))
-    return F.array(*[F.sum(F.when(idx == i, 1).otherwise(0).cast("long"))
-                     for i in range(nbins)])
+    idx = (f"(case when {col} is not null then "
+           f"least(greatest(cast(floor(({col} - {float(lo)!r}D) / "
+           f"{float(width)!r}D) as int), 0), {nbins - 1}) end)")
+    cells = ", ".join(
+        f"sum(cast(if({idx} = {i}, 1, 0) as bigint))" for i in range(nbins))
+    return F.expr(f"array({cells})")
 
 
 def _hist_merge(name: str, nbins: int) -> Column:
@@ -433,22 +406,28 @@ def check_measures(measures: dict) -> None:
                 f"pass {name}=({kind!r}, <col>)")
 
 
-def fine_measure_exprs(measures: dict) -> list:
+def fine_measure_exprs(sdf, measures: dict) -> tuple:
     """Fine-grain aggregate expressions for every measure kind —
-    shared by batch time_rollup and streaming tumbling_rollup so live
-    and batch partials stay interchangeable for ALL kinds (including
-    hist/moments/cms)."""
-    aggs = []
+    shared by batch time_rollup and the streaming tumbling/sliding
+    rollups so live and batch partials stay interchangeable for ALL
+    kinds (including hist/moments/cms). Returns ``(sdf, aggs)``: the
+    input with each hist/cms input projected to a plain alias (a
+    column name, dotted struct ref or Column, resolved like every
+    other kind's input), and the aggregates to run over it."""
+    inputs, aggs = [], []
     for name, spec in measures.items():
         kind = spec[0] if isinstance(spec, tuple) else spec
-        if kind == "hist":
-            aggs.append(_hist_fine(*_hist_spec(name, spec)).alias(name))
+        if kind in ("hist", "cms"):
+            fine, parse = ((_hist_fine, _hist_spec) if kind == "hist"
+                           else (_cms_fine, _cms_spec))
+            col, *params = parse(name, spec)
+            alias = f"_in_{name}"
+            inputs.append(
+                (F.col(col) if isinstance(col, str) else col).alias(alias))
+            aggs.append(fine(alias, *params).alias(name))
             continue
         if kind == "moments":
             aggs.append(_moments_fine(spec[1]).alias(name))
-            continue
-        if kind == "cms":
-            aggs.append(_cms_fine(*_cms_spec(name, spec)).alias(name))
             continue
         if kind == "ksample":
             aggs.append(_ksample_fine(*_ksample_spec(name, spec)).alias(name))
@@ -463,7 +442,7 @@ def fine_measure_exprs(measures: dict) -> list:
         col = spec[1] if isinstance(spec, tuple) else None
         fine, _ = _KINDS[kind]
         aggs.append((fine(col) if col is not None else fine(None)).alias(name))
-    return aggs
+    return (sdf.select("*", *inputs) if inputs else sdf), aggs
 
 
 def merge_measure_exprs(measures: dict) -> list:
@@ -523,7 +502,7 @@ def time_rollup(f: Frame, ts_col: str, grain: str,
 
 
 def _time_rollup_plain(base, keys: list, measures: dict):
-    aggs = fine_measure_exprs(measures)
+    base, aggs = fine_measure_exprs(base, measures)
     ksamples = [spec for spec in measures.values()
                 if isinstance(spec, tuple) and spec[0] == "ksample"]
     if ksamples:
@@ -722,33 +701,24 @@ def _cms_bucket(c: Column, row: int, w: int) -> Column:
                   F.lit(w))
 
 
-def _cms_fine(col, d: int, w: int) -> Column:
-    if isinstance(col, str) and not _plain_ident(col):
-        col = F.col(col)  # see _hist_fine — dotted/backticked names
-    if isinstance(col, str):
-        # generated-SQL path (r15 optimization round): the d·w per-cell
-        # sums are ONE expr() parsed server-side — the Column-builder
-        # form made ~5 py4j round trips per cell (1.7 s of driver time
-        # at 4×64 before the first job could start). Identical
-        # expression tree, identical values; codegen subexpression
-        # elimination already de-duplicates the repeated bucket hash at
-        # runtime in both forms.
-        c = f"cast(`{col}` as bigint)"
-        cells = []
-        for r in range(d):
-            b = (f"pmod(pmod(pmod({c}, {_CMS_P}) * {_CMS_A[r]}L "
-                 f"+ {_CMS_B[r]}L, {_CMS_P}), {w})")
-            cells.extend(
-                f"sum(cast(if(`{col}` is not null and {b} = {i}, 1, 0) "
-                f"as bigint))" for i in range(w))
-        return F.expr("array(" + ", ".join(cells) + ")")
-    c = col
+def _cms_fine(col: str, d: int, w: int) -> Column:
+    """Count-min sketch aggregate over the plain column ``col``
+    (``fine_measure_exprs`` projects every input to one): the d·w
+    per-cell sums are ONE expr() parsed server-side (r15 optimization
+    round) — building them as Columns made ~5 py4j round trips per
+    cell (1.7 s of driver time at 4×64 before the first job could
+    start). Codegen subexpression elimination de-duplicates the
+    repeated bucket hash at runtime. The bucket hash is
+    ``_cms_bucket``'s, so ``cms_estimate`` reads the same cells."""
+    c = f"cast({col} as bigint)"
     cells = []
     for r in range(d):
-        b = F.when(c.isNotNull(), _cms_bucket(c, r, w))
-        cells.extend(F.sum(F.when(b == i, 1).otherwise(0).cast("long"))
-                     for i in range(w))
-    return F.array(*cells)
+        b = (f"pmod(pmod(pmod({c}, {_CMS_P}) * {_CMS_A[r]}L "
+             f"+ {_CMS_B[r]}L, {_CMS_P}), {w})")
+        cells.extend(
+            f"sum(cast(if({col} is not null and {b} = {i}, 1, 0) "
+            f"as bigint))" for i in range(w))
+    return F.expr("array(" + ", ".join(cells) + ")")
 
 
 def _cms_merge(name: str, d: int, w: int) -> Column:

@@ -24,7 +24,7 @@ order-free and partition-invariant. Products vx·vy (up to ~9.2e18)
 are split into hi/lo words around 2³¹ before summation so no partial
 can overflow within the guarded domain; the one-row epilogue
 reconstructs each product sum exactly in decimal(38,0), converts to
-double via the two-part a·2⁵³ + b split (``_det_double`` — r12: a
+double via the two-part a·2⁵³ + b split (``_det_double_sql`` — r12: a
 direct int128→double cast is an engine-owned rounding that differs
 across DuckDB releases), and runs the same canonical IEEE association
 as the SQL oracle — bit-identical statistics on any engine, engine
@@ -65,15 +65,11 @@ Degenerate pairs (n < 2, or zero variance on either side) yield NULL.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import functions as F
 
 from ..frame import Frame
 
 __all__ = ["corr_matrix", "grouped_ols"]
-
-_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
 _MAX_COLS = 8                      # expression-kernel ceiling: measured
 #   ~0.2-0.4 s of driver/Catalyst/Janino cost PER PAIR (r10) — beyond
@@ -97,49 +93,28 @@ _MAX_CHUNK_ROWS = 1_000_000        # wide-kernel internal chunk: dgemm
 _P53 = 1 << 53                     # exact-double split base for epilogues
 
 
-def _det_double(t_dec):
-    """Engine-version-independent exact-integer → double conversion
-    (r12): split T = a·2⁵³ + b (b = pmod(T, 2⁵³) ∈ [0, 2⁵³), a exact —
-    T − b is a multiple of 2⁵³) and return a_d·2⁵³ + b_d. Every step
-    is either EXACT (integer split; |a| < 2⁴² and b < 2⁵³ both convert
-    to double with no rounding decision; a_d·2⁵³ is a power-of-two
-    scaling) or ONE correctly-rounded IEEE add — deterministic on any
-    engine. A direct int128/decimal→double cast is instead an
-    engine-owned rounding: DuckDB's HUGEINT→DOUBLE changed across
-    releases (the r11 driver-gate hash seam), while this two-part form
-    replays bit-identically in Spark, DuckDB (any version), and numpy.
-    The result may differ from the correctly-rounded cast by ≤ 1 ulp —
-    acceptable: the contract is cross-engine bit-REPRODUCIBILITY of a
-    value within 1 ulp of exact, not correctly-rounded conversion."""
-    b = F.pmod(t_dec, F.lit(_P53).cast("decimal(38,0)"))
-    a = ((t_dec - b) / F.lit(_P53)).cast("decimal(38,0)")
-    return a.cast("double") * F.lit(float(_P53)) + b.cast("double")
-
-
-def _quantize(c: str, scale: float):
-    """floor(x·10^q + 0.5): one IEEE multiply + exact add/floor —
-    deterministic half-up-toward-+inf quantization, long-typed.
-    NaN/±Inf null out FIRST (treated as missing, like SQL corr over
-    NULL): floor(NaN·scale + 0.5) is 0, which would silently include
-    the row as a zero value — r9 advice finding."""
-    d = F.col(c).cast("double")
-    finite = d.isNotNull() & ~F.isnan(d) & (F.abs(d) != F.lit(float("inf")))
-    return F.when(finite, F.floor(d * F.lit(scale) + F.lit(0.5)))
-
-
 # --------------------------------------------------------------------
-# Generated-SQL twins of the Column builders below (r16, VERDICT r15
-# #5 — the CMS/band treatment from r15): building the narrow kernel's
-# ~58 aggregate Columns plus the guarded epilogue costs ~1.4 s of
-# single-threaded driver py4j time PER CALL (measured: construct 1.38 s
-# / 0 Spark jobs at sf0.1), and the wide kernel's 64-column quantize
-# projection another ~1.5 s. Each builder renders the SAME expression
-# tree as ONE SQL string parsed server-side; literal types are kept
-# identical (D-suffixed doubles, bare ints/bigints, DECIMAL(38,0)
-# casts) so every arithmetic step resolves to the same Catalyst
-# expression and results stay bit-identical. The Column builders are
-# retained verbatim — non-plain identifiers fall back to them, and the
-# A/B test (test_stats_sql_parity) asserts zero value mismatch.
+# Expression builders. Each statistic has ONE builder, rendered as a
+# generated SQL string and parsed server-side in one call: building the
+# narrow kernel's ~58 aggregates plus the guarded epilogue as Column
+# trees cost ~1.4 s of single-threaded driver py4j time per call
+# (measured at sf0.1; the wide kernel's 64-column quantize projection
+# another ~1.5 s). Literal types are chosen so every arithmetic step
+# resolves to the intended Catalyst expression: D-suffixed doubles,
+# bare ints/bigints, DECIMAL(38,0) casts. The builders only ever see
+# plain positional aliases (``_positional``), never user names, so no
+# column name is quoted into the SQL; user names appear only as escaped
+# string literals on output.
+
+
+def _positional(sdf, cols: list[str]):
+    """Rename every column of ``sdf`` to ``_c{i}`` by position and
+    return (renamed frame, aliases of ``cols``). ``toDF`` parses no
+    names, so a top-level column named ``a.b``, ``x`y`` or ``b col``
+    is addressed like any other."""
+    names = sdf.columns
+    return (sdf.toDF(*[f"_c{i}" for i in range(len(names))]),
+            [f"_c{names.index(c)}" for c in cols])
 
 
 def _dlit(v: float) -> str:
@@ -153,34 +128,57 @@ def _dlit(v: float) -> str:
 
 
 def _q_sql(c: str, scale: float) -> str:
-    """SQL twin of ``_quantize`` for a plain-identifier column."""
-    d = f"CAST(`{c}` AS DOUBLE)"
+    """floor(x·10^q + 0.5) of plain column ``c``: one IEEE multiply +
+    exact add/floor — deterministic half-up-toward-+inf quantization,
+    long-typed. NaN/±Inf null out FIRST (treated as missing, like SQL
+    corr over NULL): floor(NaN·scale + 0.5) is 0, which would silently
+    include the row as a zero value — r9 advice finding."""
+    d = f"CAST({c} AS DOUBLE)"
     fin = (f"(({d} IS NOT NULL AND NOT isnan({d})) "
            f"AND NOT (abs({d}) = double('Infinity')))")
     return f"CASE WHEN {fin} THEN FLOOR({d} * {_dlit(scale)} + 0.5D) END"
 
 
 def _det_double_sql(t: str) -> str:
-    """SQL twin of ``_det_double`` over a DECIMAL(38,0) expression."""
+    """Engine-version-independent exact-integer → double conversion of
+    a DECIMAL(38,0) expression (r12): split T = a·2⁵³ + b (b = pmod(T,
+    2⁵³) ∈ [0, 2⁵³), a exact — T − b is a multiple of 2⁵³) and return
+    a_d·2⁵³ + b_d. Every step is either EXACT (integer split; |a| < 2⁴²
+    and b < 2⁵³ both convert to double with no rounding decision;
+    a_d·2⁵³ is a power-of-two scaling) or ONE correctly-rounded IEEE
+    add — deterministic on any engine. A direct int128/decimal→double
+    cast is instead an engine-owned rounding: DuckDB's HUGEINT→DOUBLE
+    changed across releases (the r11 driver-gate hash seam), while this
+    two-part form replays bit-identically in Spark, DuckDB (any
+    version), and numpy. The result may differ from the correctly-
+    rounded cast by ≤ 1 ulp — acceptable: the contract is cross-engine
+    bit-REPRODUCIBILITY of a value within 1 ulp of exact."""
     b = f"pmod({t}, CAST({_P53} AS DECIMAL(38,0)))"
     a = f"CAST(({t} - {b}) / {_P53} AS DECIMAL(38,0))"
     return f"(CAST({a} AS DOUBLE) * {_dlit(float(_P53))} + CAST({b} AS DOUBLE))"
 
 
 def _split_sql(p: str) -> tuple[str, str]:
-    """SQL twin of the hi/lo product-word split."""
+    """hi/lo words of a long product: lo = pmod(p, 2³¹) ∈ [0, 2³¹),
+    hi = (p − lo) >> 31 (exact: p − lo is a multiple of 2³¹, and an
+    arithmetic shift right is exact floor division for multiples).
+    Summing the words separately keeps every partial within i64 for
+    n ≲ 4.3e9 rows; the epilogue reconstructs hi·2³¹ + lo exactly."""
     lo = f"pmod({p}, {_M})"
     return f"shiftright({p} - {lo}, 31)", lo
 
 
 def _esc(s: str) -> str:
-    return s.replace("'", "''")
+    """Body of a single-quoted Spark SQL string literal for ``s``."""
+    return s.replace("\\", "\\\\").replace("'", "\\'")
 
 
 def _stats_sql(n: str, sx: str, sy: str, sxy: str, sxx: str, syy: str,
                quant: int) -> tuple[str, str]:
     """(cov, corr) SQL from the reconstructed sums — the one canonical
-    IEEE association both kernels and the oracle share."""
+    IEEE association both kernels and the oracle share. num/denx/deny
+    are homogeneous in 10^2q, so corr needs no rescale; cov divides by
+    the exact power-of-ten double once."""
     scale = float(10 ** quant)
     inv_sq = 1.0 / (scale * scale)
     nd = f"CAST({n} AS DOUBLE)"
@@ -195,25 +193,25 @@ def _stats_sql(n: str, sx: str, sy: str, sxy: str, sxx: str, syy: str,
     return cov, corr
 
 
-def _corr_pairs_sql(sdf, cols: list[str], pairs: list[tuple[str, str]],
+def _corr_pairs_sql(sdf, cols: list[str], names: list[str],
                     quant: int) -> "F.DataFrame":
-    """Generated-SQL twin of ``_corr_pairs`` (plain-identifier columns
-    only). Quantization is projected ONCE per column (`_q{i}`) before
-    the aggregate — the Column path inlines the quantize tree into all
-    ~58 aggregates; projecting first shrinks the parsed tree ~10× with
-    identical per-row values (quantize is a deterministic row-local
-    function, and integer sums are association-free)."""
+    """Narrow kernel: ONE aggregate computing the pairwise stats of
+    every i<j pair of the plain columns ``cols``, labelled with
+    ``names``. Quantization is projected ONCE per column (`_q{i}`)
+    before the aggregate, which shrinks the parsed tree ~10× against
+    inlining it into all ~58 aggregates (quantize is a deterministic
+    row-local function, and integer sums are association-free)."""
     scale = float(10 ** quant)
-    idx = {c: i for i, c in enumerate(cols)}
+    k = len(cols)
+    pairs = [(i, j) for i in range(k) for j in range(i + 1, k)]
     qproj = sdf.selectExpr(*[f"{_q_sql(c, scale)} AS _q{i}"
                              for i, c in enumerate(cols)])
-    aggs = [f"MAX(ABS(_q{i})) AS mx_{i}" for i in range(len(cols))]
-    for x, y in pairs:
-        qx, qy = f"_q{idx[x]}", f"_q{idx[y]}"
-        tag = f"{x}__{y}"
-        both = f"({qx} IS NOT NULL AND {qy} IS NOT NULL)"
-        vx = f"CASE WHEN {both} THEN {qx} END"
-        vy = f"CASE WHEN {both} THEN {qy} END"
+    aggs = [f"MAX(ABS(_q{i})) AS mx_{i}" for i in range(k)]
+    for i, j in pairs:
+        tag = f"{i}_{j}"
+        both = f"(_q{i} IS NOT NULL AND _q{j} IS NOT NULL)"
+        vx = f"CASE WHEN {both} THEN _q{i} END"
+        vy = f"CASE WHEN {both} THEN _q{j} END"
         xyh, xyl = _split_sql(f"({vx} * {vy})")
         xxh, xxl = _split_sql(f"({vx} * {vx})")
         yyh, yyl = _split_sql(f"({vy} * {vy})")
@@ -226,12 +224,17 @@ def _corr_pairs_sql(sdf, cols: list[str], pairs: list[tuple[str, str]],
         ]
     one = qproj.selectExpr(*aggs)
 
-    terms = [f"mx_{i} > {_MAX_V}" for i in range(len(cols))]
-    for x, y in pairs:
-        tag = f"{x}__{y}"
+    # epilogue guards (one-row, zero per-row cost): raise — never wrap.
+    # The fourth bound (r9 advice, widened r14) covers the hi-word
+    # product partials: each |hi| ≤ |v·w|/2³¹ + 1 for the xy, xx AND yy
+    # sums, so Σhi can wrap even when the first three bounds pass, and
+    # mx·my alone under-bounds Σxxh when magnitudes are asymmetric —
+    # bound the WORST family with n·(greatest(mx,my)²/2³¹ + 1).
+    terms = [f"mx_{i} > {_MAX_V}" for i in range(k)]
+    for i, j in pairs:
+        tag = f"{i}_{j}"
         nd = f"CAST(n_{tag} AS DOUBLE)"
-        mg = (f"greatest(CAST(mx_{idx[x]} AS DOUBLE), "
-              f"CAST(mx_{idx[y]} AS DOUBLE))")
+        mg = f"greatest(CAST(mx_{i} AS DOUBLE), CAST(mx_{j} AS DOUBLE))"
         terms += [
             f"n_{tag} > {_MAX_N}",
             f"{nd} * {mg} > {_dlit(_MAX_NV)}",
@@ -245,11 +248,13 @@ def _corr_pairs_sql(sdf, cols: list[str], pairs: list[tuple[str, str]],
            f"hi-word bound n*(greatest(max|x|,max|y|)^2*10^{2 * quant}"
            f"/2^31 + 1) <= {_MAX_NV:.1e}) — lower quant, rescale the "
            "column, or batch rows and merge the sufficient statistics")
+    # the guard lands in the plan exactly ONCE, gating the inline array:
+    # one copy per pair would be O(pairs²) plan nodes
     guard = f"CASE WHEN {bad} THEN raise_error('{_esc(msg)}') ELSE 0 END"
 
     structs = []
-    for x, y in pairs:
-        tag = f"{x}__{y}"
+    for i, j in pairs:
+        tag = f"{i}_{j}"
         sxy = _det_double_sql(f"(CAST(sxyh_{tag} AS DECIMAL(38,0)) * {_M} "
                               f"+ sxyl_{tag})")
         sxx = _det_double_sql(f"(CAST(sxxh_{tag} AS DECIMAL(38,0)) * {_M} "
@@ -259,14 +264,19 @@ def _corr_pairs_sql(sdf, cols: list[str], pairs: list[tuple[str, str]],
         cov, corr = _stats_sql(f"n_{tag}", f"sx_{tag}", f"sy_{tag}",
                                sxy, sxx, syy, quant)
         structs.append(
-            f"named_struct('col_x', '{_esc(x)}', 'col_y', '{_esc(y)}', "
+            f"named_struct('col_x', '{_esc(names[i])}', "
+            f"'col_y', '{_esc(names[j])}', "
             f"'n', n_{tag}, 'cov', {cov}, 'corr', {corr})")
     arr = f"array({', '.join(structs)})"
     return one.selectExpr(f"inline(CASE WHEN {guard} = 0 THEN {arr} END)")
 
 
-def _corr_epilogue_rows_sql(summed, cols: list[str], quant: int):
-    """Generated-SQL twin of ``_corr_epilogue_rows`` (wide kernel)."""
+def _corr_wide_epilogue_sql(summed, names: list[str], quant: int):
+    """Per-pair-row epilogue of the wide kernel over summed word sums —
+    the SAME guard bounds, exact decimal(38,0) reconstruction
+    (generalized from the narrow kernel's 2 words to the Arrow kernel's
+    2¹⁶ʷ weights), and IEEE association as the narrow kernel's one-row
+    epilogue, so values are bit-identical."""
     nd = "CAST(n AS DOUBLE)"
     mxx, mxy = "CAST(mxx AS DOUBLE)", "CAST(mxy AS DOUBLE)"
     mg = f"greatest({mxx}, {mxy})"
@@ -280,10 +290,13 @@ def _corr_epilogue_rows_sql(summed, cols: list[str], quant: int):
     guard = f"CASE WHEN {bad} THEN raise_error('{_esc(msg)}') ELSE 0 END"
 
     def _sum16(pre: str) -> str:
+        """sx/sy: word0 + word1·2¹⁶ exactly in decimal(38,0), ONE
+        conversion to double."""
         return (f"CAST(CAST({pre}0 AS DECIMAL(38,0)) "
                 f"+ CAST({pre}1 AS DECIMAL(38,0)) * {1 << 16} AS DOUBLE)")
 
     def _wsum(pre: str) -> str:
+        """Σ_w (hi_w·2³¹ + lo_w)·2^(16w) exactly in decimal(38,0)."""
         ts = []
         for w in range(3):
             word = (f"(CAST({pre}{w}h AS DECIMAL(38,0)) * {_M} "
@@ -293,10 +306,10 @@ def _corr_epilogue_rows_sql(summed, cols: list[str], quant: int):
 
     cov, corr = _stats_sql("n", _sum16("sx"), _sum16("sy"),
                            _wsum("sxy"), _wsum("sxx"), _wsum("syy"), quant)
-    names = ", ".join(f"'{_esc(c)}'" for c in cols)
+    lits = ", ".join(f"'{_esc(c)}'" for c in names)
     return summed.selectExpr(
-        f"element_at(array({names}), x + 1) AS col_x",
-        f"element_at(array({names}), y + 1) AS col_y",
+        f"element_at(array({lits}), x + 1) AS col_x",
+        f"element_at(array({lits}), y + 1) AS col_y",
         f"CASE WHEN {guard} = 0 THEN n END AS n",
         f"{cov} AS cov", f"{corr} AS corr")
 
@@ -310,7 +323,8 @@ def corr_matrix(f: Frame, cols: list[str], quant: int = 6) -> Frame:
     ``_MAX_WIDE``): the O(k²) pair work moves into an exact Arrow/BLAS
     kernel (``_corr_wide``) — per-pair Catalyst/Janino cost makes an
     8,128-pair expression plan unplannable — with bit-identical
-    results (pinned by test)."""
+    results (pinned by test). Any column name works, including ones
+    with dots, backticks or spaces."""
     if len(cols) < 2:
         raise ValueError("corr_matrix: need at least 2 columns")
     if len(cols) > _MAX_WIDE:
@@ -327,19 +341,10 @@ def corr_matrix(f: Frame, cols: list[str], quant: int = 6) -> Frame:
         raise ValueError(f"corr_matrix: unknown columns {missing}")
     if not 0 <= quant <= 8:
         raise ValueError(f"corr_matrix: quant must be in [0, 8], got {quant}")
-    scale = float(10 ** quant)
-    pairs = [(cols[i], cols[j]) for i in range(len(cols))
-             for j in range(i + 1, len(cols))]
-    # generated-SQL builders need plain identifiers (r16 — the rollup
-    # lesson: backticking a dotted/backticked name breaks or reresolves
-    # it); anything else takes the original Column builders
-    plain = all(_IDENT_RE.match(c) for c in cols)
+    sdf, aliases = _positional(f.sdf, cols)
     if len(cols) <= _MAX_COLS:
-        if plain:
-            return Frame(_corr_pairs_sql(f.sdf, cols, pairs, quant))
-        v = {c: _quantize(c, scale) for c in cols}
-        return Frame(_corr_pairs(f.sdf, v, pairs, quant))
-    return Frame(_corr_wide(f.sdf, cols, quant, use_sql=plain))
+        return Frame(_corr_pairs_sql(sdf, aliases, cols, quant))
+    return Frame(_corr_wide(sdf, aliases, cols, quant))
 
 
 def _pin_blas_threads(n: int = 1) -> None:
@@ -368,8 +373,9 @@ def _pin_blas_threads(n: int = 1) -> None:
         pass
 
 
-def _corr_wide(sdf, cols: list[str], quant: int, use_sql: bool = True):
-    """Wide-matrix kernel (k > _MAX_COLS): the per-pair EXPRESSION kernel costs
+def _corr_wide(sdf, cols: list[str], names: list[str], quant: int):
+    """Wide-matrix kernel (k > _MAX_COLS) over the plain columns ``cols``,
+    labelled with ``names``: the per-pair EXPRESSION kernel costs
     ~0.2 s of driver/Catalyst/Janino time PER PAIR (superlinear beyond
     ~50 pairs; measured r10), so k = 128's 8,128 pairs are unplannable
     as expressions. This kernel moves the O(k²) work into ONE Arrow
@@ -401,13 +407,7 @@ def _corr_wide(sdf, cols: list[str], quant: int, use_sql: bool = True):
 
     k = len(cols)
     scale = float(10 ** quant)
-    if use_sql:
-        # one server-side-parsed projection instead of k Column trees
-        # (~12 py4j round trips each — ~0.8 s of driver time at k=64)
-        proj = sdf.selectExpr(*[f"{_q_sql(c, scale)} AS _qv{i}"
-                                for i, c in enumerate(cols)])
-    else:
-        proj = sdf.select(*[_quantize(c, scale).alias(f"_qv{i}")
+    proj = sdf.selectExpr(*[f"{_q_sql(c, scale)} AS _qv{i}"
                             for i, c in enumerate(cols)])
     pair_x = [i for i in range(k) for _ in range(i + 1, k)]
     pair_y = [j for i in range(k) for j in range(i + 1, k)]
@@ -504,179 +504,7 @@ def _corr_wide(sdf, cols: list[str], quant: int, use_sql: bool = True):
     summed = partials.groupBy("x", "y").agg(
         *[(F.max(c) if c in ("mxx", "mxy") else F.sum(c)).alias(c)
           for c in cols_out[2:]])
-    if use_sql:
-        return _corr_epilogue_rows_sql(summed, cols, quant)
-    return _corr_epilogue_rows(summed, cols, quant)
-
-
-def _corr_epilogue_rows(summed, cols: list[str], quant: int):
-    """Per-pair-row epilogue over summed word sums — the SAME guard
-    bounds, exact decimal(38,0) reconstruction (generalized from the
-    narrow kernel's 2 words to the Arrow kernel's 2⁸ʷ weights), and
-    IEEE association as the narrow kernel's one-row epilogue, so
-    values are bit-identical."""
-    scale = float(10 ** quant)
-    nd = F.col("n").cast("double")
-    mxx, mxy = F.col("mxx").cast("double"), F.col("mxy").cast("double")
-    bad = ((F.col("mxx") > F.lit(_MAX_V)) | (F.col("mxy") > F.lit(_MAX_V))
-           | (F.col("n") > F.lit(_MAX_N))
-           | (nd * F.greatest(mxx, mxy) > F.lit(_MAX_NV))
-           # fourth bound over the WORST hi-word family: |hi| partials
-           # of xy, xx AND yy are all <= greatest(mx,my)^2/2^31 + 1
-           # (r14 advice: mx*my alone missed Σxxh under asymmetric
-           # magnitudes, e.g. max|vx|~3e9 with tiny |vy|)
-           | (nd * (F.greatest(mxx, mxy) * F.greatest(mxx, mxy)
-                    / F.lit(float(_M)) + F.lit(1.0))
-              > F.lit(_MAX_NV)))
-    guard = F.when(bad, F.raise_error(F.lit(
-        f"corr_matrix: input exceeds the scaled-long domain at "
-        f"quant={quant} — lower quant, rescale the column, or batch "
-        "rows and merge the sufficient statistics"))).otherwise(F.lit(0))
-
-    def _sum16(pre: str):
-        """sx/sy: word0 + word1·2¹⁶ exactly in decimal(38,0), ONE
-        conversion to double — the same exact-integer → binary64
-        rounding as the narrow kernel's long sums."""
-        return (F.col(f"{pre}0").cast("decimal(38,0)")
-                + F.col(f"{pre}1").cast("decimal(38,0)") * F.lit(1 << 16)
-                ).cast("double")
-
-    def _wsum(pre: str):
-        """Σ_w (hi_w·2³¹ + lo_w)·2^(16w) exactly in decimal(38,0) —
-        the narrow kernel's hi/lo reconstruction generalized over the
-        three 16-bit product words; the deterministic two-part
-        conversion to double (``_det_double``, r12)."""
-        acc = None
-        for w in range(3):
-            word = (F.col(f"{pre}{w}h").cast("decimal(38,0)") * F.lit(_M)
-                    + F.col(f"{pre}{w}l"))
-            t = word * F.lit(1 << (16 * w))
-            acc = t if acc is None else acc + t
-        return _det_double(acc)
-
-    inv_sq = 1.0 / (scale * scale)
-    sx, sy = _sum16("sx"), _sum16("sy")
-    sxy, sxx, syy = _wsum("sxy"), _wsum("sxx"), _wsum("syy")
-    num = sxy * nd - sx * sy
-    denx = sxx * nd - sx * sx
-    deny = syy * nd - sy * sy
-    cov = F.when(F.col("n") >= 2,
-                 num / (nd * (nd - F.lit(1.0))) * F.lit(inv_sq))
-    corr = F.when((F.col("n") >= 2) & (denx > 0) & (deny > 0),
-                  num / (F.sqrt(denx) * F.sqrt(deny)))
-    names = F.array(*[F.lit(c) for c in cols])
-    return summed.select(
-        F.element_at(names, F.col("x") + 1).alias("col_x"),
-        F.element_at(names, F.col("y") + 1).alias("col_y"),
-        F.when(guard == 0, F.col("n")).alias("n"),
-        cov.alias("cov"), corr.alias("corr"))
-
-
-def _corr_pairs(sdf, v: dict, pairs: list[tuple[str, str]],
-                quant: int) -> "F.DataFrame":
-    """One aggregate computing the pairwise stats for ``pairs`` —
-    ``v`` maps column name → quantized-long expression."""
-    scale = float(10 ** quant)
-    cols = list(dict.fromkeys([c for p in pairs for c in p]))
-
-    def _split(p):
-        """hi/lo words of a long product: lo = pmod(p, 2³¹) ∈ [0, 2³¹),
-        hi = (p − lo) >> 31 (exact: p − lo is a multiple of 2³¹, and
-        arithmetic shift right is exact floor division for multiples).
-        Summing the words separately keeps every partial within i64 for
-        n ≲ 4.3e9 rows; the epilogue reconstructs hi·2³¹ + lo exactly."""
-        lo = F.pmod(p, F.lit(_M))
-        return F.shiftright(p - lo, 31), lo
-
-    aggs = [F.max(F.abs(v[c])).alias(f"mx_{i}") for i, c in enumerate(cols)]
-    for x, y in pairs:
-        both = v[x].isNotNull() & v[y].isNotNull()
-        tag = f"{x}__{y}"
-        vx, vy = F.when(both, v[x]), F.when(both, v[y])
-        xyh, xyl = _split(vx * vy)
-        xxh, xxl = _split(vx * vx)
-        yyh, yyl = _split(vy * vy)
-        aggs += [
-            F.sum(F.when(both, 1).otherwise(0)).alias(f"n_{tag}"),
-            F.sum(vx).alias(f"sx_{tag}"),
-            F.sum(vy).alias(f"sy_{tag}"),
-            F.sum(xyh).alias(f"sxyh_{tag}"), F.sum(xyl).alias(f"sxyl_{tag}"),
-            F.sum(xxh).alias(f"sxxh_{tag}"), F.sum(xxl).alias(f"sxxl_{tag}"),
-            F.sum(yyh).alias(f"syyh_{tag}"), F.sum(yyl).alias(f"syyl_{tag}"),
-        ]
-    one = sdf.agg(*aggs)
-
-    # epilogue guards (one-row, zero per-row cost): raise — never wrap
-    mx = {c: F.col(f"mx_{i}") for i, c in enumerate(cols)}
-    terms = [mx[c] > F.lit(_MAX_V) for c in cols]
-    for x, y in pairs:
-        n = F.col(f"n_{x}__{y}").cast("double")
-        mxx, mxy = mx[x].cast("double"), mx[y].cast("double")
-        # fourth bound (r9 advice, widened r14): hi-word product
-        # partials. Each |hi| ≤ |v·w|/2³¹ + 1 for the xy, xx AND yy
-        # sums, so Σhi can wrap even when the first three bounds pass
-        # (e.g. max|v| ≈ 3.03e9 with n ≈ 3e9 gives Σhi ≈ 1.3e19 >
-        # 2⁶³−1). mx·my alone under-bounds Σxxh when magnitudes are
-        # asymmetric (max|vx| ≈ 3e9, tiny |vy|): bound the WORST
-        # family with n·(greatest(mx,my)²/2³¹ + 1).
-        mg = F.greatest(mxx, mxy)
-        terms += [F.col(f"n_{x}__{y}") > F.lit(_MAX_N),
-                  n * mg > F.lit(_MAX_NV),
-                  n * (mg * mg / F.lit(float(_M)) + F.lit(1.0))
-                  > F.lit(_MAX_NV)]
-    # balanced OR tree: a left-deep 1,500-term chain overflows the JVM
-    # stack inside column-node conversion at the 496-pair batch width
-    while len(terms) > 1:
-        terms = [terms[i] | terms[i + 1] if i + 1 < len(terms) else terms[i]
-                 for i in range(0, len(terms), 2)]
-    bad = terms[0]
-    # the guard lands in the plan exactly ONCE (gating the inline array
-    # below): embedding it per pair — r9's coalesce(guard, n) — costs
-    # O(pairs) copies of an O(pairs)-term expression, ~750k plan nodes
-    # at the 496-pair batch width (JVM stack overflow in conversion)
-    guard = F.when(bad, F.raise_error(F.lit(
-        f"corr_matrix: input exceeds the scaled-long domain at quant={quant} "
-        f"(need |x|*10^{quant} <= {_MAX_V}, rows <= {_MAX_N}, "
-        f"n*max|x|*10^{quant} <= {_MAX_NV:.1e}, and the hi-word bound "
-        f"n*(greatest(max|x|,max|y|)^2*10^{2 * quant}/2^31 + 1) <= "
-        f"{_MAX_NV:.1e}) — "
-        "lower quant, rescale the column, or batch rows and merge the "
-        "sufficient statistics"))).otherwise(F.lit(0))
-
-    def _recon(pre: str, tag: str):
-        """Exact Σ product from its hi/lo word sums, in decimal(38,0)
-        (the i128 twin): hi·2³¹ + lo, then the deterministic two-part
-        conversion to double (``_det_double``, r12)."""
-        return _det_double(
-            F.col(f"{pre}h_{tag}").cast("decimal(38,0)") * F.lit(_M)
-            + F.col(f"{pre}l_{tag}"))
-
-    inv_sq = 1.0 / (scale * scale)   # 10^-2q, exact double for q ≤ 8
-
-    def _stats(x: str, y: str):
-        tag = f"{x}__{y}"
-        nd = F.col(f"n_{tag}").cast("double")
-        sx = F.col(f"sx_{tag}").cast("double")
-        sy = F.col(f"sy_{tag}").cast("double")
-        sxy = _recon("sxy", tag)
-        sxx = _recon("sxx", tag)
-        syy = _recon("syy", tag)
-        # canonical association — mirrored verbatim by the SQL oracle.
-        # num/denx/deny are homogeneous in 10^2q, so corr needs no
-        # rescale; cov divides by the exact power-of-ten double once.
-        num = sxy * nd - sx * sy
-        denx = sxx * nd - sx * sx
-        deny = syy * nd - sy * sy
-        cov = F.when(F.col(f"n_{tag}") >= 2,
-                     num / (nd * (nd - F.lit(1.0))) * F.lit(inv_sq))
-        corr = F.when((F.col(f"n_{tag}") >= 2) & (denx > 0) & (deny > 0),
-                      num / (F.sqrt(denx) * F.sqrt(deny)))
-        return F.struct(F.lit(x).alias("col_x"), F.lit(y).alias("col_y"),
-                        F.col(f"n_{tag}").alias("n"),
-                        cov.alias("cov"), corr.alias("corr"))
-
-    arr = F.array(*[_stats(x, y) for x, y in pairs])
-    return one.select(F.inline(F.when(guard == F.lit(0), arr)))
+    return _corr_wide_epilogue_sql(summed, names, quant)
 
 
 def grouped_ols(f: Frame, group_cols: list[str] | str, x_col: str,
@@ -692,7 +520,7 @@ def grouped_ols(f: Frame, group_cols: list[str] | str, x_col: str,
     exact int64 sum (products hi/lo-split around 2³¹ so no partial
     wraps inside the guarded domain), the epilogue reconstructs each
     product sum exactly in decimal(38,0), converts via the
-    version-independent a·2⁵³ + b split (``_det_double``), and the
+    version-independent a·2⁵³ + b split (``_det_double_sql``), and the
     closed forms run one canonical IEEE association mirrored by the
     SQL oracle:
 
@@ -720,70 +548,16 @@ def grouped_ols(f: Frame, group_cols: list[str] | str, x_col: str,
         raise ValueError("grouped_ols: x and y must differ")
     if not 0 <= quant <= 8:
         raise ValueError(f"grouped_ols: quant must be in [0, 8], got {quant}")
-    scale = float(10 ** quant)
-    if all(_IDENT_RE.match(c) for c in (x_col, y_col, *groups)):
-        # r16: generated-SQL twin (see _corr_pairs_sql) — the Column
-        # builders below cost ~0.3 s of driver py4j time per call;
-        # parity pinned by test_grouped_ols_sql_parity
-        return _grouped_ols_sql(f.sdf, groups, x_col, y_col, quant)
-    qx, qy = _quantize(x_col, scale), _quantize(y_col, scale)
-    both = qx.isNotNull() & qy.isNotNull()
-    vx, vy = F.when(both, qx), F.when(both, qy)
-
-    def _split(p):
-        lo = F.pmod(p, F.lit(_M))
-        return F.shiftright(p - lo, 31), lo
-
-    xyh, xyl = _split(vx * vy)
-    xxh, xxl = _split(vx * vx)
-    yyh, yyl = _split(vy * vy)
-    agg = f.sdf.groupBy(*groups).agg(
-        F.sum(F.when(both, 1).otherwise(0)).alias("_n"),
-        F.sum(vx).alias("_sx"), F.sum(vy).alias("_sy"),
-        F.sum(xyh).alias("_sxyh"), F.sum(xyl).alias("_sxyl"),
-        F.sum(xxh).alias("_sxxh"), F.sum(xxl).alias("_sxxl"),
-        F.sum(yyh).alias("_syyh"), F.sum(yyl).alias("_syyl"),
-        F.max(F.abs(vx)).alias("_mx"), F.max(F.abs(vy)).alias("_my"))
-
-    nd = F.col("_n").cast("double")
-    mxd, myd = F.col("_mx").cast("double"), F.col("_my").cast("double")
-    bad = (F.col("_mx") > F.lit(_MAX_V)) | (F.col("_my") > F.lit(_MAX_V)) \
-        | (F.col("_n") > F.lit(_MAX_N)) \
-        | (nd * F.greatest(mxd, myd) > F.lit(_MAX_NV)) \
-        | (nd * (F.greatest(mxd, myd) * F.greatest(mxd, myd)
-                 / F.lit(float(_M)) + F.lit(1.0))
-           > F.lit(_MAX_NV))
-    guard = F.when(
-        bad & F.col("_n").isNotNull(),
-        F.raise_error(F.lit(
-            f"grouped_ols: a group exceeds the scaled-long domain at "
-            f"quant={quant} — lower quant, rescale, or pre-aggregate "
-            "(same bounds as corr_matrix)"))).otherwise(F.col("_n"))
-
-    def _recon(pre):
-        return _det_double(
-            F.col(f"{pre}h").cast("decimal(38,0)") * F.lit(_M)
-            + F.col(f"{pre}l"))
-
-    sx, sy = F.col("_sx").cast("double"), F.col("_sy").cast("double")
-    num = _recon("_sxy") * nd - sx * sy
-    denx = _recon("_sxx") * nd - sx * sx
-    deny = _recon("_syy") * nd - sy * sy
-    ok = (F.col("_n") >= 2) & (denx > 0)
-    slope = F.when(ok, num / denx)
-    intercept = F.when(ok, (sy - (num / denx) * sx) / nd
-                       / F.lit(scale))
-    r2 = F.when(ok & (deny > 0), (num / denx) * (num / deny))
-    return Frame(agg.select(
-        *groups, guard.alias("n"), slope.alias("slope"),
-        intercept.alias("intercept"), r2.alias("r2")))
+    sdf, (x, y, *gs) = _positional(f.sdf, [x_col, y_col, *groups])
+    out = _grouped_ols_sql(sdf, gs, x, y, quant)
+    return Frame(out.toDF(*groups, "n", "slope", "intercept", "r2"))
 
 
 def _grouped_ols_sql(sdf, groups: list[str], x_col: str, y_col: str,
                      quant: int):
-    """Generated-SQL twin of the grouped_ols Column builders (plain
-    identifiers only) — same quantize/split/guard/closed-form trees,
-    parsed server-side in two calls."""
+    """grouped_ols over plain columns: one grouped aggregate of the
+    split word sums and one guarded closed-form epilogue, both built
+    as generated SQL."""
     scale = float(10 ** quant)
     qx, qy = _q_sql(x_col, scale), _q_sql(y_col, scale)
     both = f"({qx} IS NOT NULL AND {qy} IS NOT NULL)"
@@ -831,7 +605,6 @@ def _grouped_ols_sql(sdf, groups: list[str], x_col: str, y_col: str,
                  f"/ {nd} / {_dlit(scale)} END")
     r2 = (f"CASE WHEN {ok} AND {deny} > 0 "
           f"THEN {num} / {denx} * ({num} / {deny}) END")
-    gsel = [f"`{g}`" for g in groups]
-    return Frame(agg.selectExpr(
-        *gsel, f"{guard} AS n", f"{slope} AS slope",
-        f"{intercept} AS intercept", f"{r2} AS r2"))
+    return agg.selectExpr(
+        *groups, f"{guard} AS n", f"{slope} AS slope",
+        f"{intercept} AS intercept", f"{r2} AS r2")

@@ -37,16 +37,6 @@ LONG_MAX = (1 << 63) - 1
 
 
 # --------------------------------------------------------------------- exact
-def dedup_exact(f: Frame, cols: list[str] | str, id_col: str) -> Frame:
-    """Keep one row per distinct value-tuple of ``cols`` — the survivor is
-    the row with the smallest ``id_col`` (deterministic, unlike
-    dropDuplicates)."""
-    names = [cols] if isinstance(cols, str) else list(cols)
-    w_cols = [F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies")]
-    out = f.sdf.groupBy(*names).agg(*w_cols)
-    return Frame(out)
-
-
 def dedup_exact_by_fingerprint(f: Frame, text_col: str, id_col: str) -> Frame:
     """Exact text dedup that shuffles 16-byte digests instead of documents:
     group on md5(normalized text). At 100 TB this is the difference
@@ -393,11 +383,6 @@ def hamming64(a: Column, b: Column) -> Column:
 
 
 # ------------------------------------------------------ cluster resolution
-def _is_cached(df: DataFrame) -> bool:
-    sl = df.storageLevel
-    return bool(sl.useMemory or sl.useDisk or sl.useOffHeap)
-
-
 def _cc_round(labels: DataFrame, edges: DataFrame,
               salt: int) -> tuple[DataFrame, DataFrame]:
     """One connected-components round: neighbor-min propagation + pointer

@@ -86,10 +86,10 @@ def pagerank(edges: Frame, src: str = "src", dst: str = "dst",
         # lazy (zero driver actions per round unless tol > 0). An r16
         # restructure folding this aggregate and the contribution sums
         # into ONE keyed aggregate (sentinel dangling key) measured
-        # SLOWER in a same-window interleaved A/B (tools/
-        # ab_pagerank_r16.py: med 3.12 vs 2.87 s, stage count unchanged
-        # at 62) — the dangling sum then waits behind the wide exchange
-        # instead of running in parallel with it. Kept as-is.
+        # SLOWER in a same-window interleaved A/B (OPTIMIZATION_r16.md:
+        # med 3.12 vs 2.87 s, stage count unchanged at 62) — the
+        # dangling sum then waits behind the wide exchange instead of
+        # running in parallel with it. Kept as-is.
         dang = (ranks.filter(F.col("_deg").isNull())
                 .agg(F.coalesce(F.sum("_rank"), F.lit(0.0)).alias("_dang")))
         contrib = (ranks.join(e, ranks["node"] == e["_src"])

@@ -107,10 +107,6 @@ def _sniff(payload) -> str | None:
     return None
 
 
-def _is_bmp(payload) -> bool:
-    return _sniff(payload) == "bmp"
-
-
 def decode_images(f: Frame, id_col: str = "id", payload_col: str = "payload",
                   n_feat: int = 8, strict: bool = False) -> Frame:
     """Decode/feature-extract images via mapInPandas (Arrow batches).
@@ -452,8 +448,3 @@ def resize_images(f: Frame, width: int, height: int, id_col: str = "id",
             yield pd.DataFrame({"id": pdf[id_col], "payload": out})
 
     return Frame(f.sdf.mapInPandas(kernel, schema=schema))
-
-
-def resize_stub(f: Frame, width: int, height: int) -> Frame:
-    """Back-compat alias for the pre-codec API — see resize_images."""
-    return resize_images(f, width, height)

@@ -91,12 +91,6 @@ def punct_ratio(col) -> Column:
     return F.when(F.length(c) > 0, n_punct / F.length(c)).otherwise(F.lit(0.0))
 
 
-def uppercase_ratio(col) -> Column:
-    c = _c(col)
-    n_upper = F.length(c) - F.length(F.regexp_replace(c, r"[A-Z]", ""))
-    return F.when(F.length(c) > 0, n_upper / F.length(c)).otherwise(F.lit(0.0))
-
-
 def mean_word_length(col) -> Column:
     t = tokens(col)
     return F.when(F.size(t) > 0,
@@ -321,12 +315,6 @@ def rolling_hash_from_tokens(t: Column, window: int = 8) -> Column:
     idx = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)))
     grams = F.transform(idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(t, i, window))))
     return F.array_min(grams)
-
-
-def rolling_hash_fingerprint(col, window: int = 8) -> Column:
-    """Column-level rolling-hash fingerprint for ad-hoc use. In pipelines
-    project `tokens(col)` first and use ``rolling_hash_from_tokens``."""
-    return rolling_hash_from_tokens(tokens(col), window)
 
 
 def _bm25_epilogue(j, id_col: str, k: int, k1: float, b: float,

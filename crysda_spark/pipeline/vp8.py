@@ -504,13 +504,6 @@ def _add_residual(plane, bx, by, pred, res):
             plane[by + r, bx + c] = _clamp255(row[c] + res[4 * r + c])
 
 
-def _copy_pred(plane, bx, by, pred):
-    for r in range(len(pred)):
-        row = pred[r]
-        for c in range(len(row)):
-            plane[by + r, bx + c] = row[c]
-
-
 # ------------------------------------------------------- frame decoding
 def _parse_modes(hdr, mbw, mbh):
     """Per-MB mode records from the first partition (§10-11), raster

@@ -323,10 +323,6 @@ def _avg2(a: int, b: int) -> int:
     return (((a ^ b) & 0xFEFEFEFE) >> 1) + (a & b)  # per-byte average
 
 
-def _byte_avg(a, b):
-    return _avg2(a, b)
-
-
 def _channels(p: int) -> tuple[int, int, int, int]:
     return (p >> 24) & 0xFF, (p >> 16) & 0xFF, (p >> 8) & 0xFF, p & 0xFF
 

@@ -39,6 +39,23 @@ _DEFAULTS = {
 }
 
 
+def _driver_memory() -> str:
+    """Driver heap: ``SPARK_GRAFT_DRIVER_MEM``, else 48g capped at half
+    of physical memory. A local-mode heap larger than the host lets the
+    JVM grow until the kernel's OOM killer ends it: on a 16 GB host the
+    test suite's driver reached 15 GB and died mid-run, failing every
+    later test."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys_mb = (os.sysconf("SC_PAGE_SIZE")
+                   * os.sysconf("SC_PHYS_PAGES")) >> 20
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{max(1024, min(48 * 1024, phys_mb // 2))}m"
+
+
 def get_spark(app_name: str = "crysda_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -55,7 +72,7 @@ def get_spark(app_name: str = "crysda_spark", master: str | None = None,
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     for k, v in _DEFAULTS.items():
         b = b.config(k, v)

@@ -8,8 +8,8 @@ the reference's whole-file-in-memory CSV.parse
 - read_csv (src/crysda.cr:30-37): separator, quote, comment, skip N
   lines, header row index / headerless auto-names Col1..N, custom NA
   string, custom true/false vocabulary, gz/zip decompression, URL input.
-- read_json (src/crysda.cr:39-47): JSON array of records, nested
-  structures flattened column-by-column, missing keys → null.
+- read_json (src/crysda.cr:39-47): JSON array of records or JSON lines,
+  nested structures flattened column-by-column, missing keys → null.
 """
 
 from __future__ import annotations
@@ -107,11 +107,22 @@ def read_csv(spark: SparkSession, path: str, separator: str = ",",
 
 def read_json(spark: SparkSession, path: str, flatten: bool = True) -> Frame:
     """JSON array / JSON-lines reader with iterative flattening of nested
-    objects and arrays (reference: src/crysda/builder.cr:101-152)."""
+    objects and arrays (reference: src/crysda/builder.cr:101-152).
+
+    The input picks the parse. When its first non-blank character is
+    ``[`` it is one JSON array, on one line or pretty-printed, and is
+    read whole (``multiLine``). Anything else is read as JSON lines, one
+    record per line; if no line parses on its own, the input is a single
+    pretty-printed object and is read whole. A whole-file parse of JSON
+    lines would stop after the first record."""
     path = _fetch_url(path)
-    sdf = spark.read.option("multiLine", True).json(path)
-    if set(sdf.columns) == {"_corrupt_record"}:
-        sdf = spark.read.json(path)  # fall back to JSON-lines
+    first = (spark.read.text(path)
+             .select(F.regexp_extract("value", r"^\s*(\S)", 1).alias("c"))
+             .where(F.col("c") != "").first())
+    whole = first is not None and first["c"] == "["
+    sdf = spark.read.option("multiLine", whole).json(path)
+    if not whole and set(sdf.columns) == {"_corrupt_record"}:
+        sdf = spark.read.option("multiLine", True).json(path)
     return Frame(_flatten_all(sdf) if flatten else sdf)
 
 

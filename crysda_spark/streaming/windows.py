@@ -18,12 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
-from ..frame import Frame
-
-
-def with_watermark(sdf: SparkDF, ts_col: str = "ts", delay: str = "10 minutes") -> SparkDF:
-    return sdf.withWatermark(ts_col, delay)
-
 
 def tumbling_counts(sdf: SparkDF, ts_col: str = "ts", width: str = "1 hour",
                     keys: list[str] | None = None,
@@ -55,7 +49,7 @@ def tumbling_rollup(sdf: SparkDF, ts_col: str = "ts", width: str = "1 hour",
     keys = keys or []
     if watermark:
         sdf = sdf.withWatermark(ts_col, watermark)
-    aggs = fine_measure_exprs(measures)
+    sdf, aggs = fine_measure_exprs(sdf, measures)
     # column order matches time_rollup exactly (keys..., bucket,
     # measures...) so batch and stream partials union positionally too
     return (sdf
@@ -249,7 +243,7 @@ def sliding_rollup(sdf: SparkDF, ts_col: str = "ts", width: str = "1 hour",
     keys = keys or []
     if watermark:
         sdf = sdf.withWatermark(ts_col, watermark)
-    aggs = fine_measure_exprs(measures)
+    sdf, aggs = fine_measure_exprs(sdf, measures)
     return (sdf
             .groupBy(F.window(ts_col, width, slide).alias("win"), *keys)
             .agg(*aggs)

@@ -221,6 +221,29 @@ def test_json_records_missing_keys(spark, tmp_path):
     assert h["votes"] == [10, None, None]
 
 
+def test_json_every_input_shape(spark, tmp_path):
+    # every shape the read_json docstring names: JSON lines (one record
+    # per line), a one-line array, a pretty-printed array (objects on
+    # their own lines or broken over several) and one pretty object
+    import json
+    recs = [{"a": 1, "n": {"b": "x"}}, {"a": 2, "n": {"b": "y"}},
+            {"a": 3, "n": {"b": "z"}}]
+    shapes = {
+        "lines.json": ("\n".join(json.dumps(r) for r in recs) + "\n", 3),
+        "array.json": (json.dumps(recs[:2]), 2),
+        "pretty_array.json": (json.dumps(recs[:2], indent=2), 2),
+        "inline_array.json": (
+            "[\n" + ",\n".join("  " + json.dumps(r) for r in recs[:2])
+            + "\n]\n", 2),
+        "pretty_object.json": (json.dumps(recs[0], indent=2), 1),
+    }
+    for name, (text, n) in shapes.items():
+        p = tmp_path / name
+        p.write_text(text)
+        h = read_json(spark, str(p)).sort_by("a").to_h()
+        assert h == {"a": [1, 2, 3][:n], "n.b": ["x", "y", "z"][:n]}, name
+
+
 def test_json_nested_flatten(spark):
     f = from_json(spark, '[{"a": {"b": 1, "c": [{"d": 2}, {"d": 3}]}}]')
     assert set(f.columns) == {"a.b", "a.c.d"}

@@ -300,6 +300,63 @@ def test_cms_overestimates_only(spark):
         assert est[f"k{k}"] <= truth[k] + 2000 // 16  # loose CMS bound
 
 
+def test_hist_cms_non_plain_inputs_match_plain(spark, tmp_path):
+    """hist/cms inputs are projected to a plain alias before the
+    aggregate, so a dotted struct ref, a name with a space and a Column
+    expression each give the state of an equivalent plain column — in
+    batch time_rollup and in a streaming tumbling_rollup, which share
+    fine_measure_exprs."""
+    from crysda_spark.streaming import windows as sw
+
+    raw = spark.createDataFrame(
+        [("2024-03-01 00:10:00", 0.5, 3), ("2024-03-01 00:20:00", 2.5, 7),
+         ("2024-03-01 00:30:00", None, None),
+         ("2024-03-01 01:05:00", 3.9, 3), ("2024-03-01 01:40:00", -1.0, 12)],
+        "ts string, v double, k long").withColumn(
+            "ts", F.col("ts").cast("timestamp"))
+    src = str(tmp_path / "events")
+    raw.coalesce(1).write.parquet(src)
+
+    def shaped(sdf):
+        return sdf.select(
+            "ts", "v", "k", F.struct("v", "k").alias("s"),
+            F.col("v").alias("v w"), F.col("k").alias("k w"),
+            (F.col("v") * 2).alias("v2"), (F.col("k") + 1).alias("k1"))
+
+    measures = dict(
+        h=("hist", "v", 0.0, 4.0, 4), h_dot=("hist", "s.v", 0.0, 4.0, 4),
+        h_sp=("hist", "v w", 0.0, 4.0, 4),
+        h2=("hist", "v2", 0.0, 8.0, 4),
+        h2_expr=("hist", F.col("s.v") * 2, 0.0, 8.0, 4),
+        c=("cms", "k", 2, 8), c_dot=("cms", "s.k", 2, 8),
+        c_sp=("cms", "k w", 2, 8),
+        c1=("cms", "k1", 2, 8), c1_expr=("cms", F.col("s.k") + 1, 2, 8))
+    same = [("h", "h_dot"), ("h", "h_sp"), ("h2", "h2_expr"),
+            ("c", "c_dot"), ("c", "c_sp"), ("c1", "c1_expr")]
+
+    def states(rows):
+        return {str(r["bucket"]): {m: list(r[m]) for m in measures}
+                for r in rows}
+
+    batch = states(time_rollup(Frame(shaped(raw)), "ts", "hour",
+                               **measures).sdf.collect())
+    assert batch["2024-03-01 00:00:00"]["h"] == [1, 0, 1, 0]
+    assert batch["2024-03-01 01:00:00"]["h"] == [1, 0, 0, 1]
+    for st in batch.values():
+        assert sum(st["c"]) == 2 * sum(st["h"])   # d rows, one count each
+        for plain, odd in same:
+            assert st[odd] == st[plain], (plain, odd)
+
+    stream = shaped(sw.stream_from_parquet_dir(spark, src, raw.schema))
+    out = sw.tumbling_rollup(stream, width="1 hour", watermark=None,
+                             **measures)
+    q = sw.run_to_memory(out, "rollup_non_plain", mode="complete")
+    q.processAllAvailable()
+    live = states(spark.table("rollup_non_plain").collect())
+    q.stop()
+    assert live == batch
+
+
 def test_cms_spec_validation(spark):
     f = _hist_events(spark)
     with pytest.raises(ValueError, match="cms needs"):
@@ -564,6 +621,6 @@ def test_topk_validation_and_streaming_rejection(events):
     with pytest.raises(ValueError, match="k must be an int"):
         ru.check_measures(dict(h=("topk", "event_type", 0)))
     with pytest.raises(ValueError, match="stream into a finer"):
-        ru.fine_measure_exprs(dict(h=("topk", "event_type", 3)))
+        ru.fine_measure_exprs(events.sdf, dict(h=("topk", "event_type", 3)))
     with pytest.raises(ValueError, match="no single merge"):
         ru.merge_measure_exprs(dict(h=("topk", "event_type", 3)))

@@ -349,14 +349,33 @@ def _bits(v):
     return None if v is None else struct.pack("<d", v)
 
 
+# top-level column names the generated SQL must never parse: a dot, a
+# backtick and a space
+_ODD = {"a": "a.b", "b": "x`y", "c": "b col"}
+
+
+def _renamed(sdf, mapping):
+    return sdf.toDF(*[mapping.get(c, c) for c in sdf.columns])
+
+
+def _assert_corr_rows_bitwise(plain, renamed, mapping):
+    want = {(mapping.get(r.col_x, r.col_x), mapping.get(r.col_y, r.col_y)): r
+            for r in plain.sdf.collect()}
+    got = _rows(renamed)
+    assert set(got) == set(want) and want
+    for p in want:
+        assert got[p].n == want[p].n
+        assert _bits(got[p].cov) == _bits(want[p].cov)
+        assert _bits(got[p].corr) == _bits(want[p].corr)
+
+
 def test_stats_sql_parity_narrow(spark):
-    # r16: the generated-SQL narrow kernel must return bit-identical
-    # rows to the original Column builders on adversarial data (nulls,
-    # NaN, +-Inf, negatives, large magnitudes near the guard bounds)
+    # corr_matrix's narrow kernel must return bit-identical rows when the
+    # same columns carry names with a dot, a backtick or a space, on
+    # adversarial data (nulls, NaN, +-Inf, negatives, large magnitudes
+    # near the guard bounds)
     import numpy as np
 
-    from crysda_spark.operators.stats import (_corr_pairs,
-                                              _corr_pairs_sql, _quantize)
     rng = np.random.default_rng(42)
     n = 500
     a = rng.normal(0, 1e5, n).round(2)
@@ -370,28 +389,25 @@ def test_stats_sql_parity_narrow(spark):
             float("-inf") if i % 19 == 0 else float(c[i]))
         rows.append((ra, rb, rc))
     sdf = spark.createDataFrame(rows, "a double, b double, c double")
-    cols = ["a", "b", "c"]
-    pairs = [("a", "b"), ("a", "c"), ("b", "c")]
-    quant = 3
-    scale = float(10 ** quant)
-    v = {x: _quantize(x, scale) for x in cols}
-    old = {(r.col_x, r.col_y): r
-           for r in _corr_pairs(sdf, v, pairs, quant).collect()}
-    new = {(r.col_x, r.col_y): r
-           for r in _corr_pairs_sql(sdf, cols, pairs, quant).collect()}
-    assert set(old) == set(new) == set(pairs)
-    for p in pairs:
-        assert old[p].n == new[p].n
-        assert _bits(old[p].cov) == _bits(new[p].cov)
-        assert _bits(old[p].corr) == _bits(new[p].corr)
+    plain = corr_matrix(Frame(sdf), ["a", "b", "c"], quant=3)
+    renamed = corr_matrix(Frame(_renamed(sdf, _ODD)),
+                          [_ODD[x] for x in "abc"], quant=3)
+    _assert_corr_rows_bitwise(plain, renamed, _ODD)
+
+    # a small hand-checked input under a spaced name
+    small = (spark.createDataFrame(
+        [(1.0, 2.0), (2.0, 4.0), (3.0, 6.5)], "a double, b double")
+        .withColumnRenamed("b", "b col"))
+    got = _rows(corr_matrix(Frame(small), ["a", "b col"]))
+    assert got[("a", "b col")].n == 3
+    assert got[("a", "b col")].corr == pytest.approx(0.997948, abs=1e-4)
 
 
 def test_stats_sql_parity_wide(spark):
-    # r16: SQL projection + SQL epilogue of the wide kernel vs the
-    # Column originals — bit-identical over every pair
+    # the wide (Arrow) kernel under the same renaming — plus a quote and
+    # a backslash, which reach the output only as SQL string literals
     import numpy as np
 
-    from crysda_spark.operators.stats import _corr_wide
     rng = np.random.default_rng(5)
     k, n = 12, 200
     m = rng.normal(0, 500, (n, k)).round(3)
@@ -405,15 +421,13 @@ def test_stats_sql_parity_wide(spark):
             r[(i + 3) % k] = float("nan")
         rows.append(tuple(r))
     sdf = spark.createDataFrame(rows, ", ".join(f"{c} double" for c in cols))
-    old = {(r.col_x, r.col_y): r
-           for r in _corr_wide(sdf, cols, 4, use_sql=False).collect()}
-    new = {(r.col_x, r.col_y): r
-           for r in _corr_wide(sdf, cols, 4, use_sql=True).collect()}
-    assert set(old) == set(new) and len(old) == k * (k - 1) // 2
-    for p in old:
-        assert old[p].n == new[p].n
-        assert _bits(old[p].cov) == _bits(new[p].cov)
-        assert _bits(old[p].corr) == _bits(new[p].corr)
+    mapping = {"c0": "a.b", "c1": "x`y", "c2": "b col", "c3": "it's",
+               "c4": "back\\slash"}
+    plain = corr_matrix(Frame(sdf), cols, quant=4)
+    renamed = corr_matrix(Frame(_renamed(sdf, mapping)),
+                          [mapping.get(c, c) for c in cols], quant=4)
+    assert len(_rows(plain)) == k * (k - 1) // 2
+    _assert_corr_rows_bitwise(plain, renamed, mapping)
 
 
 def test_stats_sql_guard_still_raises(spark):
@@ -434,21 +448,10 @@ def test_stats_sql_guard_still_raises(spark):
         spark.conf.set("spark.sql.ansi.enabled", "true")
 
 
-def test_corr_matrix_non_plain_identifier_falls_back(spark):
-    # a column name that is not a plain identifier must route through
-    # the Column builders and still compute correctly
-    sdf = (spark.createDataFrame(
-        [(1.0, 2.0), (2.0, 4.0), (3.0, 6.5)], "a double, b double")
-        .withColumnRenamed("b", "b col"))
-    got = _rows(corr_matrix(Frame(sdf), ["a", "b col"]))
-    assert got[("a", "b col")].n == 3
-    assert got[("a", "b col")].corr == pytest.approx(0.997948, abs=1e-4)
-
-
 def test_grouped_ols_sql_parity(spark):
-    # r16: the generated-SQL grouped_ols must be bit-identical to the
-    # Column builders (forced via a non-plain group alias that routes
-    # the old path) on data with nulls/NaN/groups of every degeneracy
+    # grouped_ols must be bit-identical when the group, x and y columns
+    # carry names with a dot, a backtick and a space, on data with
+    # nulls/NaN/groups of every degeneracy
     import numpy as np
 
     from crysda_spark.operators.stats import grouped_ols
@@ -467,16 +470,15 @@ def test_grouped_ols_sql_parity(spark):
             rows.append((f"g{g}", x, y))
     rows.append(("solo", 1.0, 2.0))  # n = 1 group
     sdf = spark.createDataFrame(rows, "grp string, x double, y double")
-    new = {r.grp: r for r in
-           grouped_ols(Frame(sdf), ["grp"], "x", "y", quant=3).sdf.collect()}
-    # rename to a non-identifier to force the retained Column path
-    old_in = (sdf.withColumnRenamed("grp", "grp col")
-              .withColumnRenamed("x", "x val"))
-    old = {r["grp col"]: r for r in
-           grouped_ols(Frame(old_in), ["grp col"], "x val", "y",
-                       quant=3).sdf.collect()}
-    assert set(new) == set(old) and len(new) == 6
-    for g in new:
-        assert new[g].n == old[g].n
+    want = {r.grp: r for r in
+            grouped_ols(Frame(sdf), ["grp"], "x", "y", quant=3).sdf.collect()}
+    mapping = {"grp": "a.b", "x": "x`y", "y": "b col"}
+    out = grouped_ols(Frame(_renamed(sdf, mapping)), ["a.b"], "x`y", "b col",
+                      quant=3)
+    assert out.columns == ["a.b", "n", "slope", "intercept", "r2"]
+    got = {r["a.b"]: r for r in out.sdf.collect()}
+    assert set(got) == set(want) and len(want) == 6
+    for g in want:
+        assert got[g].n == want[g].n
         for fld in ("slope", "intercept", "r2"):
-            assert _bits(new[g][fld]) == _bits(old[g][fld]), (g, fld)
+            assert _bits(got[g][fld]) == _bits(want[g][fld]), (g, fld)

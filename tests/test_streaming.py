@@ -255,7 +255,8 @@ def test_sliding_rollup_hist_matches_batch_expansion(spark, events_stream_dir):
 
     ev = spark.read.parquet(events_stream_dir)
     win = F.window("ts", "1 hour", "30 minutes").alias("win")
-    batch = (ev.groupBy(win).agg(*fine_measure_exprs(measures))
+    ev, aggs = fine_measure_exprs(ev, measures)
+    batch = (ev.groupBy(win).agg(*aggs)
              .select(F.col("win.start").alias("bucket"), "h", "n"))
     want = {str(r["bucket"]): (list(r["h"]), r["n"]) for r in batch.collect()}
     assert got == want
