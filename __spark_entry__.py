@@ -1319,10 +1319,9 @@ FROM orders GROUP BY o_orderpriority
 """)
 def percentile_prices(spark, sf_dir):
     """Exact linear-interpolation percentiles (median/p90) ≡ DuckDB
-    quantile_cont (SURVEY §2.4 aggregates) — computed via deterministic
-    bucketed rank selection (operators.quantiles.quantile_cont), NOT
-    Spark's exact `percentile`, whose aggregation buffer holds every
-    group value and dies at 100 TB scale."""
+    quantile_cont (SURVEY §2.4 aggregates) — operators.quantiles.
+    quantile_cont, one grouped Spark `percentile` aggregate exploded to
+    long (group, q, value) rows."""
     from crysda_spark.operators.quantiles import quantile_cont
     o = _t(spark, sf_dir, "orders")
     qd = quantile_cont(o.sdf, "o_totalprice", [0.5, 0.9],
@@ -3403,9 +3402,9 @@ GROUP BY l.l_returnflag
 def winsorize_price_sums(spark, sf_dir):
     """winsorize (operators.anomaly): per-group exact [p05, p95] clamp
     of l_extendedprice — the heavy-tail guard before means on noisy
-    data. Quantiles via the exact distributed quantile_cont (no
-    per-group buffering), broadcast back, codegen'd clamp. The checked
-    sum FLOOR-quantizes each clamped value to 1e-4 first: every term
+    data. Bounds via one grouped exact `percentile` aggregate,
+    broadcast back, codegen'd clamp. The checked sum FLOOR-quantizes
+    each clamped value to 1e-4 first: every term
     is then an integer-valued double (< 2^53, order-free summation),
     so engine ROUND-tie differences cannot touch the hash (the r8
     cross-SF lesson)."""
@@ -5167,10 +5166,10 @@ FROM orders
 GROUP BY o_orderstatus
 """)
 def quantile_verb_grouped(spark, sf_dir):
-    """The Frame.quantile_cont VERB's grouped wide-pivot path (frame.py)
-    — integer-index pivot over the distributed bucketed rank selection —
-    against DuckDB's quantile_cont. percentile_prices oracles the
-    underlying operator; this oracles the verb's pivot."""
+    """The Frame.quantile_cont VERB's grouped wide path (frame.py) —
+    one `p<q>` column per element of the grouped `percentile` array —
+    against DuckDB's quantile_cont. percentile_prices oracles the long
+    operator; this oracles the verb's wide form."""
     o = _t(spark, sf_dir, "orders")
     wide = (o.group_by("o_orderstatus")
             .quantile_cont("o_totalprice", [0.25, 0.5, 0.75]))

@@ -643,33 +643,20 @@ class Frame:
 
     def quantile_cont(self, value_col: str, qs, wide: bool = True) -> "Frame":
         """Exact per-group linear-interpolation quantiles (DuckDB
-        ``quantile_cont`` / Spark ``percentile`` semantics) computed by
-        distributed value-bucketed rank selection — no per-group value
-        buffering, so it survives few-groups × huge-data where Spark's
-        exact ``percentile`` aggregate dies (see operators/quantiles.py
-        for the algorithm, its determinism requirement on the input
-        lineage, and the pinned-cache note). Respects the current
-        grouping. ``wide=True`` (default) pivots to one ``p<q>`` column
-        per quantile; ``wide=False`` returns long ``(*groups, q, value)``."""
-        from .operators.quantiles import quantile_cont as _qc
-        # dedupe up front (duplicate qs would emit duplicate p-columns)
-        qs = list(dict.fromkeys(float(q) for q in qs))
+        ``quantile_cont`` / Spark ``percentile`` semantics) as one
+        grouped ``percentile`` aggregate (see operators/quantiles.py,
+        including its per-group memory note). Respects the current
+        grouping. ``wide=True`` (default) gives one ``p<q>`` column per
+        distinct quantile; ``wide=False`` returns long
+        ``(*groups, q, value)``."""
+        from .operators.quantiles import percentiles, quantile_cont
+        by = list(self._groups)
         if not wide:
-            return Frame(_qc(self._sdf, value_col, qs,
-                             by=list(self._groups)), ())
-        # pivot on the integer quantile index the operator carries
-        # through the long frame — exact-int match, immune to any float
-        # normalization drift a `q == <double literal>` equality has
-        long = _qc(self._sdf, value_col, qs, by=list(self._groups),
-                   with_index=True)
-        cols = [F.max(F.when(F.col("_qi") == i, F.col("value")))
-                .alias("p" + f"{q * 100:g}".replace(".", "_"))
+            return Frame(quantile_cont(self._sdf, value_col, qs, by=by), ())
+        agg, qs = percentiles(self._sdf, value_col, qs, by=by)
+        cols = [F.col("_ps")[i].alias("p" + f"{q * 100:g}".replace(".", "_"))
                 for i, q in enumerate(qs)]
-        if self._groups:
-            out = long.groupBy(*self._groups).agg(*cols)
-        else:
-            out = long.agg(*cols)
-        return Frame(out, ())
+        return Frame(agg.select(*by, *cols), ())
 
     def summarize_at(self, cols, funcs, sep: str = ".") -> "Frame":
         """N agg functions × M columns, auto-named ``col.suffix``

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..frame import Frame
+from .quantiles import percentiles
 
 __all__ = ["anomaly_flags", "trailing_score"]
 
@@ -78,82 +79,19 @@ def anomaly_flags(f: Frame, value_col: str, by: list[str] | str | tuple = (),
 
 
 _LOCAL_CAP = 200_000  # rows — a G×Q bounds table beyond this is misuse
-_DISTINCT_CAP = 100_000  # (group, value) rows the driver fast path accepts
-
-_NAN = float("nan")  # ONE NaN object — see _canon_key
-
-
-def _canon_key(vals) -> tuple:
-    """NaN-safe grouping key (r10 advice): collected NaN doubles are
-    DISTINCT Python objects (NaN != NaN), so a float NaN grouping-key
-    component would fragment a dict group into one entry per row —
-    and the duplicate bounds rows would then each rejoin every NaN-key
-    row (Spark's join/groupBy treat NaN as equal), duplicating output.
-    Mapping every NaN component to ONE module-level object makes dict
-    grouping match Spark's NaN-normalizing semantics (the identity
-    check inside dict lookup short-circuits the NaN != NaN compare)."""
-    import math
-    return tuple(_NAN if isinstance(v, float) and math.isnan(v) else v
-                 for v in vals)
-
-
-def _local_quantiles(rows, n_keys: int, qs: list[float]) -> dict:
-    """Exact weighted linear-interpolation quantiles over a collected
-    (keys..., value, weight) distribution — the DRIVER fast path of
-    mad_outliers/winsorize (same precedent as connected_components'
-    union-find fast path: an exact probed size gate, with the
-    distributed twin pinned equal by test). Arithmetic is the identical
-    IEEE contract as quantile_cont / DuckDB percentile_cont: rank
-    h = 1 + (n−1)·q in binary64, result = lo + (hi − lo)·frac — Python
-    floats ARE binary64, so the fast path is bit-identical to the
-    distributed path. Returns {group_tuple: [value per q]}; NaN values
-    are treated as missing (the corr_matrix r10 contract)."""
-    import math
-    groups: dict = {}
-    for r in rows:
-        v, w = r[n_keys], r[n_keys + 1]
-        if v is None or math.isnan(v):
-            continue
-        groups.setdefault(_canon_key(r[:n_keys]), []).append((v, w))
-    out = {}
-    for g, vw in groups.items():
-        vw.sort()
-        n = sum(w for _, w in vw)
-        cum = []
-        c = 0
-        for v, w in vw:
-            c += w
-            cum.append(c)
-
-        def value_at(rank: int) -> float:
-            # first distinct value whose cumulative weight reaches rank
-            import bisect
-            return vw[bisect.bisect_left(cum, rank)][0]
-
-        res = []
-        for q in qs:
-            h = 1.0 + (n - 1) * q
-            lo_r, hi_r = math.floor(h), math.ceil(h)
-            lo, hi = value_at(int(lo_r)), value_at(int(hi_r))
-            res.append(lo + (hi - lo) * (h - lo_r))
-        out[g] = res
-    return out
 
 
 def _as_local(sdf, what: str = "quantile bounds"):
     """Materialize a groups-sized frame as a LOCAL DataFrame (collect +
-    createDataFrame). quantile_cont outputs are lazy PLANS — joining
-    the plan back onto the input embeds the whole multi-pass quantile
-    pipeline as a subtree that re-executes once per downstream scan
-    (measured 3× full re-runs inside the second mad_outliers pass).
-    The result is G×Q rows (bounded by the grouping contract — it was
-    already broadcast), so collecting is the same boundedness bet —
-    but guarded (r9 advice): the collect is capped at ``_LOCAL_CAP``
+    createDataFrame). Joined back as a lazy plan, a quantile aggregate
+    re-executes once per downstream scan (mad_outliers' MAD pass scans
+    the median's join); as local data it joins back with a one-job
+    plan. The result is G×Q rows (bounded by the grouping contract — it
+    is broadcast anyway), and the collect is capped at ``_LOCAL_CAP``
     rows so an unbounded-cardinality grouping fails with an actionable
-    error instead of a driver OOM. The local table joins back as pure
-    data with a one-job plan.
+    error instead of a driver OOM.
 
-    Side effect callers must document: this executes the quantile jobs
+    Side effect callers must document: this executes the quantile job
     EAGERLY at transform-build time — bounds freeze when the operator
     is called, not when the result is first acted on."""
     rows = sdf.limit(_LOCAL_CAP + 1).collect()
@@ -174,25 +112,20 @@ def _quantile_base(sdf, keys: list, value_col: str):
             .select(*keys, v.alias("_av")))
 
 
-def _value_counts(sdf, keys: list, value_col: str):
-    """Per-(group, value) distribution table (see ``_quantile_base``
-    for the missing-value contract)."""
-    return (_quantile_base(sdf, keys, value_col)
-            .groupBy(*keys, "_av").agg(F.count(F.lit(1)).alias("_aw")))
+def _group_quantiles(sdf, keys: list, value_col: str, qs: list[float],
+                     names: list[str], what: str):
+    """Local ``(keys..., *names)`` table of per-group exact quantiles —
+    the one ``percentile`` aggregate (operators/quantiles.py), collected
+    through ``_as_local``."""
+    agg, _ = percentiles(sdf, value_col, qs, by=keys)
+    return _as_local(agg.select(*keys, *[F.col("_ps")[i].alias(n)
+                                         for i, n in enumerate(names)]),
+                     what)
 
 
-def _collapses_well(sdf, keys: list, value_col: str) -> bool:
-    """Probe whether the per-(group, value) distribution fits the
-    driver fast path: ONE aggregation-only pass (approx_count_distinct
-    — partial HLL sketches, no data shuffle). The estimate gates with
-    ~30% headroom under ``_DISTINCT_CAP``; the fast path's capped
-    collect is the exact guard behind it. Near-unique value columns
-    (a price at corpus scale) skip straight to the distributed
-    quantile, paying no wasted collapse shuffle."""
-    est = (_quantile_base(sdf, keys, value_col)
-           .agg(F.approx_count_distinct(F.struct(*keys, F.col("_av")))
-                .alias("e")).collect()[0]["e"])
-    return est <= int(_DISTINCT_CAP * 0.7)
+def _join_back(sdf, keys: list, table):
+    return (sdf.join(F.broadcast(table), on=keys) if keys
+            else sdf.crossJoin(F.broadcast(table)))
 
 
 def winsorize(f: Frame, value_col: str, by: list[str] | str | tuple = (),
@@ -203,86 +136,31 @@ def winsorize(f: Frame, value_col: str, by: list[str] | str | tuple = (),
     means/regressions on noisy web data. Adds ``out_col`` (default
     ``{value_col}_w``); rows keep their order and count.
 
-    Scale shape (r10 — the adaptive rewrite): ONE aggregation-only
-    probe (``_collapses_well``, partial-HLL distinct estimate) picks
-    the path. Low-distinct values (the common case for quantities,
-    scores, bucketed metrics): the rows COLLAPSE to a per-(group,
-    value) count table — one map-side-combined corpus shuffle — and
-    the quantiles compute on the DRIVER in one job
-    (``_local_quantiles`` — bit-identical IEEE interpolation; the
-    connected-components fast-path precedent, distributed twin pinned
-    equal by test). Near-unique values (a price column): the exact
-    distributed ``quantile_cont`` runs directly over the projected
-    rows — a collapse would be a wasted full shuffle. The bounds
-    arrive as one tiny (groups × 2) table and join back broadcast;
-    the clamp is a codegen'd least/greatest.
+    Scale shape: both bounds come from ONE grouped ``percentile``
+    aggregate over the projected values (equal values collapse to
+    per-group counts map-side), arrive as one tiny (groups × 2) table
+    and join back broadcast; the clamp is a codegen'd least/greatest.
     Deterministic: interpolation arithmetic is fixed IEEE, so the
     clamped values are reproducible — and SQL-oracle-able (DuckDB's
-    percentile_cont implements the same h = 1+(n−1)q contract).
+    percentile_cont implements the same (n−1)q contract).
     Null and NaN values are missing (excluded from the distribution).
 
-    EAGER: the quantile jobs run NOW (at call time, via the bounded
+    EAGER: the quantile job runs NOW (at call time, via the bounded
     local collect — see ``_as_local``), so the clamp bounds freeze
     against the input as of this call; a source that mutates between
     this call and the first action on the result does not move them."""
-    from .quantiles import _MAX_BUCKETS, quantile_cont
     if not 0.0 <= q_lo < q_hi <= 1.0:
         raise ValueError(f"winsorize: need 0 <= q_lo < q_hi <= 1, "
                          f"got ({q_lo}, {q_hi})")
     keys = [by] if isinstance(by, str) else list(by)
     out_col = out_col or f"{value_col}_w"
-    spark = f.sdf.sparkSession
-    # fused probe (r15 optimization round): the path-picking distinct
-    # estimate AND the distributed path's bucket split points come out
-    # of ONE aggregation job over the same projection — previously the
-    # probe and quantile_cont's bounds pass each scanned the input
-    # (two of the five full passes this operator paid). The split
-    # points are wasted work only on the collapse path, where they are
-    # a few extra percentile sketches inside an aggregate this job
-    # runs anyway.
-    n_b = min(int(spark.conf.get("spark.sql.shuffle.partitions")),
-              _MAX_BUCKETS)
-    qb = _quantile_base(f.sdf, keys, value_col)
-    agg_cols = [F.approx_count_distinct(
-        F.struct(*keys, F.col("_av"))).alias("_e")]
-    if n_b > 1:
-        probs = [i / n_b for i in range(1, n_b)]
-        agg_cols.append(F.percentile_approx(
-            "_av", F.array(*[F.lit(p) for p in probs]),
-            F.lit(4 * n_b)).alias("_sp"))
-    prow = qb.agg(*agg_cols).first()
-    collapses = prow["_e"] <= int(_DISTINCT_CAP * 0.7)
-    vc_rows = (_value_counts(f.sdf, keys, value_col)
-               .limit(_DISTINCT_CAP + 1).collect()
-               if collapses else None)
-    if vc_rows is not None and len(vc_rows) <= _DISTINCT_CAP:
-        # driver fast path: the whole quantile reduces to ONE job (the
-        # collapse) + exact bit-identical local interpolation
-        qv = _local_quantiles(vc_rows, len(keys), [q_lo, q_hi])
-        bounds = spark.createDataFrame(
-            [(*g, lo, hi) for g, (lo, hi) in qv.items()],
-            f.sdf.select(*keys).schema
-            .add("_lo", "double").add("_hi", "double"))
-    else:
-        # near-unique values: collapse buys nothing — run the exact
-        # distributed quantile straight over the projected rows,
-        # reusing the fused probe's split points (no bounds job)
-        qs = quantile_cont(qb, "_av",
-                           [q_lo, q_hi], by=keys or None, with_index=True,
-                           bounds=list(prow["_sp"] or [])
-                           if n_b > 1 else [])
-        bounds = _as_local(
-            qs.groupBy(*keys)
-            .agg(F.min(F.when(F.col("_qi") == 0, F.col("value")))
-                 .alias("_lo"),
-                 F.min(F.when(F.col("_qi") == 1, F.col("value")))
-                 .alias("_hi")), "winsorize bounds")
-    joined = (f.sdf.join(F.broadcast(bounds), on=keys) if keys
-              else f.sdf.crossJoin(F.broadcast(bounds)))
+    bounds = _group_quantiles(_quantile_base(f.sdf, keys, value_col), keys,
+                              "_av", [q_lo, q_hi], ["_lo", "_hi"],
+                              "winsorize bounds")
     clamped = F.least(F.greatest(F.col(value_col).cast("double"),
                                  F.col("_lo")), F.col("_hi"))
-    return Frame(joined.withColumn(out_col, clamped)
-                 .drop("_lo", "_hi"))
+    return Frame(_join_back(f.sdf, keys, bounds)
+                 .withColumn(out_col, clamped).drop("_lo", "_hi"))
 
 
 def mad_outliers(f: Frame, value_col: str,
@@ -295,75 +173,27 @@ def mad_outliers(f: Frame, value_col: str,
     flags NOTHING — constant-ish groups produce no alarms, matching
     the no-false-positive posture of ``anomaly_flags``.
 
-    Adaptive shape (r10, closing the r9 judge directive): ONE
-    aggregation-only probe (``_collapses_well``) picks the path.
-    Low-distinct values: the rows COLLAPSE once to a per-(group,
-    value) count table (one map-side-combined corpus shuffle — the
-    only corpus-sized work besides the output scan), and — because
-    MAD depends only on the value MULTISET — median, the deviation
-    fold (|v − med|, summed counts), and MAD all run on the DRIVER in
-    that one job (``_local_quantiles`` — bit-identical IEEE
-    interpolation; distributed twin pinned equal by test).
-    Near-unique values: two direct exact ``quantile_cont`` passes,
-    each group-sized result collected local (bounded — ``_as_local``)
-    before joining back — as lazy plans the first pass would
-    re-execute inside every scan of the second (measured 3×).
-    The output plan is one scan of the raw input plus two broadcast
-    joins either way. Null and NaN values are missing.
+    Scale shape: two grouped ``percentile`` aggregates — the median
+    over the projected values, then the MAD over their absolute
+    deviations — each group-sized result collected local (bounded —
+    ``_as_local``) before joining back; as a lazy plan the median
+    would re-execute inside the MAD pass. The output plan is one scan
+    of the raw input plus two broadcast joins. Null and NaN values are
+    missing.
     The comparison runs on round(9) values so the flag is reproducible
     cross-engine (|v−m| sits exactly AT k·MAD in ties; rounding both
     sides first removes the last-ulp ambiguity).
 
-    EAGER: both quantile passes run NOW (at call time, via the bounded
+    EAGER: both quantile jobs run NOW (at call time, via the bounded
     local collect — see ``_as_local``); the median/MAD freeze against
     the input as of this call."""
-    from .quantiles import quantile_cont
     keys = [by] if isinstance(by, str) else list(by)
-    spark = f.sdf.sparkSession
-    nk = len(keys)
-    vc_rows = (_value_counts(f.sdf, keys, value_col)
-               .limit(_DISTINCT_CAP + 1).collect()
-               if _collapses_well(f.sdf, keys, value_col) else None)
-    if vc_rows is not None and len(vc_rows) <= _DISTINCT_CAP:
-        # driver fast path: ONE corpus job (the collapse) — median,
-        # deviation fold, and MAD all run locally over the collected
-        # distribution with bit-identical interpolation arithmetic
-        meds = _local_quantiles(vc_rows, nk, [0.5])
-        devs: dict = {}
-        for r in vc_rows:
-            g = _canon_key(r[:nk])
-            d = abs(r[nk] - meds[g][0])
-            acc = devs.setdefault(g, {})
-            acc[d] = acc.get(d, 0) + r[nk + 1]
-        dev_rows = [(*g, d, w) for g, acc in devs.items()
-                    for d, w in acc.items()]
-        mads = _local_quantiles(dev_rows, nk, [0.5])
-        # fresh schema object per frame — StructType.add mutates in place
-        med = spark.createDataFrame(
-            [(*g, m[0]) for g, m in meds.items()],
-            f.sdf.select(*keys).schema.add("_med", "double"))
-        mad = spark.createDataFrame(
-            [(*g, m[0]) for g, m in mads.items()],
-            f.sdf.select(*keys).schema.add("_mad", "double"))
-    else:
-        # near-unique values: collapse buys nothing — two direct exact
-        # quantile passes over the projected rows (the NaN-free base
-        # keeps both paths on one missing-value contract)
-        base = _quantile_base(f.sdf, keys, value_col)
-        med = _as_local(quantile_cont(base, "_av", [0.5], by=keys or None)
-                        .select(*keys, F.col("value").alias("_med")),
-                        "median")
-        dev = ((base.join(F.broadcast(med), on=keys) if keys
-                else base.crossJoin(F.broadcast(med)))
-               .select(*keys, F.abs(F.col("_av") - F.col("_med"))
-                       .alias("_dv")))
-        mad = _as_local(quantile_cont(dev, "_dv", [0.5], by=keys or None)
-                        .select(*keys, F.col("value").alias("_mad")),
-                        "MAD")
-    full = (f.sdf.join(F.broadcast(med), on=keys) if keys
-            else f.sdf.crossJoin(F.broadcast(med)))
-    full = (full.join(F.broadcast(mad), on=keys) if keys
-            else full.crossJoin(F.broadcast(mad)))
+    base = _quantile_base(f.sdf, keys, value_col)
+    med = _group_quantiles(base, keys, "_av", [0.5], ["_med"], "median")
+    dev = _join_back(base, keys, med).select(
+        *keys, F.abs(F.col("_av") - F.col("_med")).alias("_dv"))
+    mad = _group_quantiles(dev, keys, "_dv", [0.5], ["_mad"], "MAD")
+    full = _join_back(_join_back(f.sdf, keys, med), keys, mad)
     dev_out = F.abs(F.col(value_col).cast("double") - F.col("_med"))
     flag = ((F.col("_mad") > 0)
             & (F.round(dev_out, 9)

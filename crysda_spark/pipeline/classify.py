@@ -552,9 +552,9 @@ def _gd_grad_np(X, yv, wmat, bvec, dims, scale, multi, tot, mx):
 
 
 _GD_LOCAL_CAP_VALUES = 4_000_000  # n·(dims+1) float64s the driver will
-#   hold for the GD fast path (~32 MB) — the connected-components /
-#   _local_quantiles precedent: an exact probed size gate with the
-#   distributed twin pinned bit-equal by test
+#   hold for the GD fast path (~32 MB) — the connected-components
+#   precedent: an exact probed size gate with the distributed twin
+#   pinned bit-equal by test
 
 
 def _gd_collect_local(sdf, dims: int):

@@ -106,7 +106,6 @@ def test_as_local_cardinality_cap(spark, monkeypatch):
     # cardinality must fail with an actionable error, not a driver OOM
     from crysda_spark.operators import anomaly as am
     monkeypatch.setattr(am, "_LOCAL_CAP", 3)
-    monkeypatch.setattr(am, "_DISTINCT_CAP", 0)  # force the distributed path
     sdf = spark.range(10).selectExpr("id as g", "cast(id as double) as v")
     with pytest.raises(ValueError, match="too high-cardinality"):
         am.mad_outliers(Frame(sdf), "v", by="g")
@@ -114,28 +113,37 @@ def test_as_local_cardinality_cap(spark, monkeypatch):
         am.winsorize(Frame(sdf), "v", by="g")
 
 
-def test_quantile_fast_path_equals_distributed(spark, monkeypatch):
-    # the driver fast path must be BIT-identical to the distributed
-    # weighted quantile_cont path (CC fast-path precedent)
+def test_winsorize_mad_bounds_match_numpy_linear(spark):
+    # winsorize/mad_outliers bounds are BIT-identical to numpy's
+    # "linear" quantile over the group's present values (NULL and NaN
+    # missing), on duplicate-heavy data in 3 groups
+    import math
     import random
+
+    import numpy as np
     from crysda_spark.operators import anomaly as am
     rng = random.Random(5)
     rows = [(rng.choice("xyz"), float(rng.randint(0, 40)) / 4)
             for _ in range(3000)] + [("x", None), ("z", float("nan"))]
     sdf = spark.createDataFrame(rows, "g string, v double")
-    fast_w = am.winsorize(Frame(sdf), "v", by="g", q_lo=0.1, q_hi=0.9)
-    fast_m = am.mad_outliers(Frame(sdf), "v", by="g", k=2.0)
-    monkeypatch.setattr(am, "_DISTINCT_CAP", 0)
-    slow_w = am.winsorize(Frame(sdf), "v", by="g", q_lo=0.1, q_hi=0.9)
-    slow_m = am.mad_outliers(Frame(sdf), "v", by="g", k=2.0)
+    vals = {}
+    for g, v in rows:
+        if v is not None and not math.isnan(v):
+            vals.setdefault(g, []).append(v)
 
-    def canon(f, cols):
-        return sorted((tuple(repr(v) for v in r)
-                       for r in f.sdf.select(*cols).collect()))
+    def q(a, p):
+        return float(np.quantile(np.array(a), p, method="linear"))
 
-    assert canon(fast_w, ["g", "v", "v_w"]) == canon(slow_w, ["g", "v", "v_w"])
-    assert canon(fast_m, ["g", "v", "_med", "_mad", "is_outlier"]) == \
-        canon(slow_m, ["g", "v", "_med", "_mad", "is_outlier"])
+    w = (am.winsorize(Frame(sdf), "v", by="g", q_lo=0.1, q_hi=0.9).sdf
+         .groupBy("g").agg(F.min("v_w").alias("lo"), F.max("v_w").alias("hi")))
+    assert {r.g: (r.lo.hex(), r.hi.hex()) for r in w.collect()} == \
+        {g: (q(a, 0.1).hex(), q(a, 0.9).hex()) for g, a in vals.items()}
+    m = (am.mad_outliers(Frame(sdf), "v", by="g", k=2.0).sdf
+         .select("g", "_med", "_mad").distinct().collect())
+    meds = {g: q(a, 0.5) for g, a in vals.items()}
+    assert {r.g: (r._med.hex(), r._mad.hex()) for r in m} == \
+        {g: (meds[g].hex(), q([abs(v - meds[g]) for v in a], 0.5).hex())
+         for g, a in vals.items()}
 
 
 def test_nan_group_key_fast_path_one_group(spark):

@@ -323,7 +323,7 @@ def test_logreg_gd_nonfinite_features_raise(spark):
 
 def test_gd_local_fast_path_equals_distributed(spark, monkeypatch):
     # r11: small training sets collect once and iterate driver-side
-    # (CC/_local_quantiles precedent) — must be BIT-identical to the
+    # (CC fast-path precedent) — must be BIT-identical to the
     # distributed Arrow kernel, binary and multi-class
     rows = [([float((i * 5) % 9) / 9, float(i % 4) / 4], float(i % 2))
             for i in range(120)]

@@ -409,8 +409,7 @@ def test_random_quantiles_match_duckdb(spark, spec):
     from crysda_spark.operators.quantiles import quantile_cont
     _, q, col = spec
     sdf = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    out = quantile_cont(sdf, col, [q], by=["l_returnflag"],
-                        num_partitions=8)
+    out = quantile_cont(sdf, col, [q], by=["l_returnflag"])
     got = {(r["l_returnflag"],): round(r["value"], 9)
            for r in out.collect()}
 
