@@ -326,7 +326,9 @@ class Frame:
 
         def _part(batches):
             for pdf in batches:
-                mask = pdf.apply(lambda r: bool(fn(r.to_dict())), axis=1)
+                mask = pdf.apply(
+                    lambda r: bool(fn({k: v for k, v in r.to_dict().items()
+                                       if k != ORD})), axis=1)
                 yield pdf[mask.values]
 
         return self._wrap(self._sdf.mapInPandas(_part, schema=schema))

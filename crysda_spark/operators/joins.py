@@ -13,6 +13,12 @@ runtime (plus skew splitting). The API-layer semantics we reproduce:
 - key columns first in the output (src/crysda/joins.cr:153-163)
 - empty ``by`` → cartesian product (src/crysda/joins.cr:197-206)
 - semi/anti join: left columns only, no suffixing (src/crysda/joins.cr:38-55)
+
+Inner, left and cross joins carry the left frame's hidden ordinal, so
+order-dependent verbs after the join (keep-first ``distinct``, ``slice``,
+row numbers) follow the left frame's scan order, not the join's output
+order, which Spark does not fix. A plan that never reads the ordinal
+prunes it.
 """
 
 from __future__ import annotations
@@ -21,7 +27,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import functions as F
 
-from ..frame import Frame
+from ..frame import ORD, Frame
 
 
 def default_by(left: Frame, right: Frame) -> list[str]:
@@ -54,7 +60,9 @@ def _normalize_by(by) -> tuple[list[str], list[str]]:
 
 def join(left: Frame, right: Frame, by, how: str,
          suffices: Sequence[str] = (".x", ".y")) -> Frame:
-    l, r = left.sdf, right.sdf
+    keeps_ord = how in ("inner", "left")  # cross_join is inner with by=[]
+    l = left._with_ord()._sdf if keeps_ord else left.sdf
+    r = right.sdf
 
     if by is None:
         by = default_by(left, right)
@@ -84,8 +92,10 @@ def join(left: Frame, right: Frame, by, how: str,
     # key columns leftmost, then left's columns, then right's new columns
     lcols = [c if c not in shared else c + suffices[0] for c in left.columns if c not in lk]
     rcols = [c for c in r2.columns if c not in lk and c not in lcols]
+    ords = [ORD] if keeps_ord else []
     # suffixed names contain dots — backtick-quote to avoid struct access
-    return Frame(out.select(*[F.col(f"`{c}`") for c in [*lk, *lcols, *rcols]]))
+    return Frame(out.select(*[F.col(f"`{c}`")
+                              for c in [*lk, *lcols, *rcols, *ords]]))
 
 
 def _suffix(sdf, shared: list[str], suffix: str):

@@ -20,8 +20,8 @@ Scale shape (100 TB):
 - Levenshtein runs ONLY on blocked candidates, inside codegen
   (pyspark.sql.functions.levenshtein — no Python);
 - clustering reuses :func:`~crysda_spark.pipeline.dedup.
-  connected_components` (adaptive salt, driver fast path for small
-  pair graphs).
+  connected_components` (driver union-find for small pair graphs,
+  plain distributed rounds otherwise).
 
 No reference parity: the reference engine (src/crysda/*.cr) has no
 record-linkage surface; this is beyond-reference pipeline tooling.

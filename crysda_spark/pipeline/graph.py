@@ -9,11 +9,10 @@ support; this module follows the same iterative-relational pattern as
 - each power iteration is two shuffles (ranks⋈edges on src, then a
   groupBy(dst) contribution sum), both expressed declaratively so AQE
   handles skewed hubs;
-- ``localCheckpoint`` EVERY round (default) truncates the lineage:
-  each round reads ``ranks`` twice (dangling mass + contributions), so
+- ``localCheckpoint`` every round truncates the lineage: each round
+  reads ``ranks`` twice (dangling mass + contributions), so
   un-checkpointed lineage DOUBLES per iteration — O(2^rounds) replans,
-  not just long ones. Raise ``checkpoint_every`` only if you know the
-  round count is tiny;
+  not just long ones;
 - dangling-node mass (nodes with no out-edges) is redistributed
   uniformly each round, keeping Σrank = 1 exactly (Page et al. 1999,
   "The PageRank citation ranking", §2.7 dangling handling).
@@ -42,8 +41,8 @@ def out_degrees(edges: Frame, src: str = "src") -> Frame:
 
 
 def pagerank(edges: Frame, src: str = "src", dst: str = "dst",
-             damping: float = 0.85, max_iter: int = 10, tol: float = 0.0,
-             checkpoint_every: int = 1) -> Frame:
+             damping: float = 0.85, max_iter: int = 10,
+             tol: float = 0.0) -> Frame:
     """PageRank over a directed edge list (duplicate edges count once —
     the edge list is distinct-ed on entry, matching the host-graph
     convention). Returns (node, rank); Σrank = 1 up to float error.
@@ -81,11 +80,11 @@ def pagerank(edges: Frame, src: str = "src", dst: str = "dst",
         return Frame(base.select("node").withColumn("rank", F.lit(0.0)))
     ranks = base.withColumn("_rank", F.lit(1.0 / n))
 
-    for it in range(max_iter):
-        # dangling mass as a 1-row broadcast — the iteration stays fully
-        # lazy (zero driver actions per round unless tol > 0). An r16
-        # restructure folding this aggregate and the contribution sums
-        # into ONE keyed aggregate (sentinel dangling key) measured
+    for _ in range(max_iter):
+        # dangling mass as a 1-row broadcast — no driver collect per
+        # round unless tol > 0. An r16 restructure folding this
+        # aggregate and the contribution sums into ONE keyed
+        # aggregate (sentinel dangling key) measured
         # SLOWER in a same-window interleaved A/B (OPTIMIZATION_r16.md:
         # med 3.12 vs 2.87 s, stage count unchanged at 62) — the
         # dangling sum then waits behind the wide exchange instead of
@@ -102,9 +101,8 @@ def pagerank(edges: Frame, src: str = "src", dst: str = "dst",
                        (F.lit((1.0 - damping) / n)
                         + F.lit(damping) * F.col("_dang") / n
                         + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
-                        ).alias("_rank")))
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(eager=True)
+                        ).alias("_rank"))
+               .localCheckpoint(eager=True))
         if tol > 0.0:
             delta = (nxt.select("node", "_rank")
                      .join(ranks.select("node", F.col("_rank").alias("_prev")),

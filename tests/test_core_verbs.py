@@ -111,6 +111,15 @@ def test_distinct_keeps_first_row(sleep_df):
     assert kept == [first_carni]
 
 
+def test_filter_by_row_after_join_sees_only_columns(spark):
+    # joins carry the hidden ordinal; the row predicate must not see it
+    a = from_records(spark, [{"k": 1, "v": 10}, {"k": 2, "v": 20}])
+    b = from_records(spark, [{"k": 1, "w": 5}, {"k": 2, "w": 6}])
+    out = a.inner_join(b, by="k").filter_by_row(
+        lambda r: sorted(r) == ["k", "v", "w"] and r["v"] > 15)
+    assert [tuple(r) for r in out.sdf.collect()] == [(2, 20, 6)]
+
+
 def test_distinct_keep_first_dotted_names(spark):
     # join suffixes produce dotted names (.x/.y) — distinct must
     # backtick-quote them in the keep-first aggregate

@@ -284,21 +284,24 @@ def test_bpe_ish_token_count(spark):
         .collect()[0].n == 7
 
 
-def test_connected_components_raises_when_unconverged(spark):
+def test_connected_components_raises_when_unconverged(spark, monkeypatch):
     # a 40-node chain cannot resolve in one round: the guard must fire
     # instead of returning partially-merged labels (r5 judge directive)
     from crysda_spark import from_records
     pairs = from_records(spark, [
         {"id_a": i, "id_b": i + 1} for i in range(40)
     ]).sdf
+    monkeypatch.setattr(dd, "_MAX_ITER", 1)
+    monkeypatch.setattr(dd, "_DRIVER_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dd.connected_components(pairs, max_iter=1, driver_max_edges=0)
+        dd.connected_components(pairs)
 
 
 def test_connected_components_giant_component_skew(spark):
     """r6 judge directive #1 gate: one dominant component (100k members,
-    1000:1 against the rest) resolves correctly through the salted
-    rounds — labels exact for both the giant star and the tail."""
+    1000:1 against the rest; 200k directed edges, past the driver
+    union-find) resolves correctly through plain distributed rounds —
+    labels exact for both the giant star and the tail."""
     big = spark.range(1, 100_001).select(
         F.lit(0).cast("long").alias("id_a"), F.col("id").alias("id_b"))
     base = 10_000_000
@@ -318,56 +321,73 @@ def test_connected_components_giant_component_skew(spark):
     assert agg.bad_small == 0       # each pair labeled by its even member
 
 
-def test_cc_auto_salt_uniform_stays_unsalted(spark, monkeypatch):
-    """r7 judge directive #2: uniform corpora must not pay the salt
-    tax — the degree probe picks salt=1 and no round escalates."""
+@pytest.mark.parametrize("shape", ["uniform_pairs", "star_200", "chain_64"])
+def test_cc_distributed_labels_exact(spark, monkeypatch, shape):
+    """The distributed loop (forced with ``_DRIVER_MAX_EDGES = 0``)
+    gives exact min-id labels on uniform pairs, a 200-leaf hub and a
+    64-node chain giant."""
     calls = []
     orig = dd._cc_round
     monkeypatch.setattr(dd, "_cc_round",
-                        lambda l, e, s: calls.append(s) or orig(l, e, s))
-    pairs = spark.range(100).select((F.col("id") * 2).alias("id_a"),
-                                    (F.col("id") * 2 + 1).alias("id_b"))
-    labels = dd.connected_components(pairs, skew_floor=50, auto_salt=4,
-                                     driver_max_edges=0)
-    assert calls and all(s == 1 for s in calls)
-    assert labels.filter(F.col("comp") != F.col("id") - F.col("id") % 2) \
-        .count() == 0
+                        lambda l, e: calls.append(1) or orig(l, e))
+    monkeypatch.setattr(dd, "_DRIVER_MAX_EDGES", 0)
+    if shape == "uniform_pairs":
+        pairs = spark.range(100).select((F.col("id") * 2).alias("id_a"),
+                                        (F.col("id") * 2 + 1).alias("id_b"))
+        labels = dd.connected_components(pairs)
+        assert labels.filter(F.col("comp") != F.col("id") - F.col("id") % 2) \
+            .count() == 0
+    elif shape == "star_200":
+        star = spark.range(200).select(F.lit(0).cast("long").alias("id_a"),
+                                       (F.col("id") + 1).alias("id_b"))
+        labels = dd.connected_components(star)
+        assert labels.filter(F.col("comp") != 0).count() == 0
+    else:
+        chain = spark.range(63).select(F.col("id").alias("id_a"),
+                                       (F.col("id") + 1).alias("id_b"))
+        labels = dd.connected_components(chain)
+        agg = labels.agg(F.countDistinct("comp").alias("c"),
+                         F.min("comp").alias("m"),
+                         F.count(F.lit(1)).alias("n")).collect()[0]
+        assert (agg.c, agg.m, agg.n) == (1, 0, 64)   # labels exact
+    assert calls, "expected the distributed path"
 
 
-def test_cc_auto_salt_hub_salts_from_round_zero(spark, monkeypatch):
-    calls = []
-    orig = dd._cc_round
-    monkeypatch.setattr(dd, "_cc_round",
-                        lambda l, e, s: calls.append(s) or orig(l, e, s))
-    star = spark.range(200).select(F.lit(0).cast("long").alias("id_a"),
-                                   (F.col("id") + 1).alias("id_b"))
-    labels = dd.connected_components(star, skew_floor=50, auto_salt=4,
-                                     driver_max_edges=0)
-    assert calls and all(s == 4 for s in calls)
-    assert labels.filter(F.col("comp") != 0).count() == 0
-
-
-def test_cc_auto_salt_escalates_on_concentration(spark, monkeypatch):
-    """A chain giant has max degree 2 — invisible to the degree probe —
-    but concentrates as rounds merge clusters; the round-2 label
-    re-probe must escalate the remaining rounds."""
-    calls = []
-    orig = dd._cc_round
-    monkeypatch.setattr(dd, "_cc_round",
-                        lambda l, e, s: calls.append(s) or orig(l, e, s))
+def test_cc_convergence_costs_no_extra_action(spark, monkeypatch):
+    """The path decision is one bounded collect and convergence rides
+    the per-round checkpoint job: no count probe, no second collect."""
+    from crysda_spark import from_records
+    pairs = from_records(spark, [
+        {"id_a": 5, "id_b": 2}, {"id_a": 2, "id_b": 9},
+        {"id_a": 40, "id_b": 41},
+    ]).sdf
     chain = spark.range(63).select(F.col("id").alias("id_a"),
                                    (F.col("id") + 1).alias("id_b"))
-    labels = dd.connected_components(chain, skew_floor=4, auto_salt=4,
-                                     driver_max_edges=0)
-    assert calls[0] == 1 and 4 in calls          # started plain, escalated
-    agg = labels.agg(F.countDistinct("comp").alias("c"),
-                     F.min("comp").alias("m"),
-                     F.count(F.lit(1)).alias("n")).collect()[0]
-    assert (agg.c, agg.m, agg.n) == (1, 0, 64)   # labels still exact
+    cls = type(pairs)
+    n = {"collect": 0, "count": 0, "localCheckpoint": 0}
+    for name in n:
+        def counted(self, *a, _orig=getattr(cls, name), _name=name, **k):
+            n[_name] += 1
+            return _orig(self, *a, **k)
+        monkeypatch.setattr(cls, name, counted)
+    dd.connected_components(pairs)
+    assert (n["collect"], n["count"]) == (1, 0)
+
+    rounds = []
+    orig = dd._cc_round
+    monkeypatch.setattr(dd, "_cc_round",
+                        lambda l, e: rounds.append(1) or orig(l, e))
+    monkeypatch.setattr(dd, "_DRIVER_MAX_EDGES", 0)
+    for k in n:
+        n[k] = 0
+    labels = dd.connected_components(chain)
+    assert (n["collect"], n["count"]) == (1, 0)
+    assert rounds and n["localCheckpoint"] == len(rounds)
+    assert {r.comp for r in labels.collect()} == {0}
 
 
 def test_cc_driver_fast_path_small_graph(spark, monkeypatch):
-    """r8: a probed-small graph (directed edges <= driver_max_edges)
+    """r8: a small graph (directed edges <= _DRIVER_MAX_EDGES)
     must resolve via driver union-find — zero _cc_round invocations —
     with labels identical to the distributed path (min reachable id)."""
     def _boom(*a, **k):
@@ -384,23 +404,25 @@ def test_cc_driver_fast_path_small_graph(spark, monkeypatch):
 
 def test_cc_driver_fast_path_threshold_boundary(spark, monkeypatch):
     """Just past the threshold the distributed path must engage: the
-    probe counts DIRECTED edge rows, so 3 undirected pairs = 6 > 5."""
+    bounded collect counts DIRECTED edge rows, so 3 undirected pairs
+    = 6 > 5."""
     calls = []
     orig = dd._cc_round
     monkeypatch.setattr(dd, "_cc_round",
-                        lambda l, e, s: calls.append(s) or orig(l, e, s))
+                        lambda l, e: calls.append(1) or orig(l, e))
+    monkeypatch.setattr(dd, "_DRIVER_MAX_EDGES", 5)
     from crysda_spark import from_records
     pairs = from_records(spark, [
         {"id_a": 1, "id_b": 2}, {"id_a": 3, "id_b": 4},
         {"id_a": 5, "id_b": 6},
     ]).sdf
-    labels = dd.connected_components(pairs, driver_max_edges=5)
+    labels = dd.connected_components(pairs)
     assert calls, "expected the distributed path past the threshold"
     assert labels.filter(F.col("comp") != F.col("id") - (F.col("id") + 1) % 2) \
         .count() == 0
 
 
-def test_cc_driver_fast_path_matches_distributed(spark):
+def test_cc_driver_fast_path_matches_distributed(spark, monkeypatch):
     """Differential: random graph through BOTH paths, identical labels."""
     import random
     rng = random.Random(8)
@@ -409,43 +431,9 @@ def test_cc_driver_fast_path_matches_distributed(spark):
     from crysda_spark import from_records
     pairs = from_records(spark, rows).sdf
     fast = {r.id: r.comp for r in dd.connected_components(pairs).collect()}
-    slow = {r.id: r.comp
-            for r in dd.connected_components(pairs, driver_max_edges=0)
-            .collect()}
+    monkeypatch.setattr(dd, "_DRIVER_MAX_EDGES", 0)
+    slow = {r.id: r.comp for r in dd.connected_components(pairs).collect()}
     assert fast == slow
-
-
-def test_cc_salt_validation(spark):
-    pairs = spark.range(1).select(F.col("id").alias("id_a"),
-                                  (F.col("id") + 1).alias("id_b"))
-    with pytest.raises(ValueError, match="salt"):
-        dd.connected_components(pairs, salt="always")
-    with pytest.raises(ValueError, match="salt"):
-        dd.connected_components(pairs, salt=0)
-
-
-def test_cc_round_plan_is_salted(spark):
-    """The salted path must be IN THE PLAN. localCheckpoint truncates
-    lineage in the loop, so probe one round's pre-checkpoint plan: both
-    the neighbor-min side and the pointer jump must carry the salt
-    column; salt=1 must produce a salt-free plan (escape hatch)."""
-    from crysda_spark.plans.inspect import _explain_str
-    edges = spark.range(10).select(F.lit(0).cast("long").alias("src"),
-                                   (F.col("id") + 1).alias("dst"))
-    edges = edges.unionByName(edges.select(F.col("dst").alias("src"),
-                                           F.col("src").alias("dst")))
-    labels = (edges.select(F.col("src").alias("id")).dropDuplicates()
-              .withColumn("comp", F.col("id")))
-    plan, stepped = dd._cc_round(labels, edges, salt=8)
-    try:
-        assert "__salt__" in _explain_str(plan, "formatted")
-    finally:
-        stepped.unpersist()
-    plain, stepped = dd._cc_round(labels, edges, salt=1)
-    try:
-        assert "__salt__" not in _explain_str(plain, "formatted")
-    finally:
-        stepped.unpersist()
 
 
 def test_connected_components_keeps_caller_cache(spark):
