@@ -326,9 +326,8 @@ class Frame:
 
         def _part(batches):
             for pdf in batches:
-                mask = pdf.apply(
-                    lambda r: bool(fn({k: v for k, v in r.to_dict().items()
-                                       if k != ORD})), axis=1)
+                view = pdf.drop(columns=[ORD], errors="ignore")
+                mask = view.apply(lambda r: bool(fn(r.to_dict())), axis=1)
                 yield pdf[mask.values]
 
         return self._wrap(self._sdf.mapInPandas(_part, schema=schema))
@@ -580,9 +579,13 @@ class Frame:
 
     def rowwise(self) -> "Frame":
         """Each row its own group; per-row ops are plain column exprs in
-        Spark so this only tags intent (reference: src/crysda/dataframe.cr:405-412)."""
-        t = self._with_ord()
-        return Frame(t._sdf, (ORD,))
+        Spark so this only tags intent (reference: src/crysda/dataframe.cr:405-412).
+        The group key is a fresh id; a carried ordinal repeats after a
+        fan-out join, so it is kept as the leading field to hold row order."""
+        key = F.monotonically_increasing_id()
+        if ORD in self._sdf.columns:
+            key = F.struct(F.col(ORD), key)
+        return Frame(self._sdf.withColumn(ORD, key), (ORD,))
 
     def grouped_by(self) -> "Frame":
         """Distinct key tuples (reference: src/crysda/groupdf.cr:94-97)."""
@@ -601,11 +604,13 @@ class Frame:
         executors and never materializes all groups at once (unlike the
         reference's eager per-group frame list). Groups must
         individually fit a worker; that is inherent to grouped-map.
-        ``schema`` defaults to the current schema (shape-preserving fn)."""
+        ``schema`` defaults to the current schema (shape-preserving fn).
+        ``fn`` sees the visible columns only, unless the frame is rowwise
+        (grouped by the hidden ordinal itself)."""
         if not self._groups:
             raise ValueError("transform_groups requires a grouped frame")
-        out_schema = schema or self._sdf.schema
-        out = self._sdf.groupBy(*self._groups).applyInPandas(fn, schema=out_schema)
+        sdf = self._sdf if ORD in self._groups else self.sdf
+        out = sdf.groupBy(*self._groups).applyInPandas(fn, schema=schema or sdf.schema)
         return Frame(out, self._groups)
 
     def group_frames(self) -> list["Frame"]:

@@ -414,9 +414,9 @@ def _driver_cc(edges: DataFrame, rows: list) -> DataFrame:
     ``rows`` of ``edges`` (at most ``_DRIVER_MAX_EDGES``). Distributed
     label-propagation rounds cost scheduler jobs even when the graph is
     a few hundred edges — after LSH banding a lightly-duplicated corpus
-    yields exactly that shape — while 100k directed edges take ~0.3 s
-    of driver CPU (one 4-vCPU host). Labels match the distributed path
-    exactly: comp = min reachable id."""
+    yields exactly that shape — while union-find over at most
+    ``_DRIVER_MAX_EDGES`` edges is one pass of a driver loop. Labels
+    match the distributed path exactly: comp = min reachable id."""
     parent: dict = {}
 
     def find(x):

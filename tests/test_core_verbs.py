@@ -120,6 +120,29 @@ def test_filter_by_row_after_join_sees_only_columns(spark):
     assert [tuple(r) for r in out.sdf.collect()] == [(2, 20, 6)]
 
 
+def test_transform_groups_after_join_sees_only_columns(spark):
+    # joins carry the hidden ordinal; the grouped-map function must not
+    # see it, or a result checked against the visible schema fails
+    a = from_records(spark, [{"k": 1, "v": 10}, {"k": 2, "v": 20}])
+    b = from_records(spark, [{"k": 1, "w": 5}, {"k": 2, "w": 6}])
+    out = a.inner_join(b, by="k").group_by("k").transform_groups(
+        lambda pdf: pdf.assign(s=pdf.sum(axis=1)),
+        schema="k long, v long, w long, s long")
+    got = sorted(tuple(r) for r in out.sdf.collect())
+    assert got == [(1, 10, 5, 16), (2, 20, 6, 28)]
+
+
+def test_rowwise_after_fanout_join_is_one_row_per_group(spark):
+    # a 1:2 join repeats the left row's ordinal; rowwise must still make
+    # every row its own group
+    a = from_records(spark, [{"k": 1, "v": 10}])
+    b = from_records(spark, [{"k": 1, "w": 5}, {"k": 1, "w": 6}])
+    out = a.inner_join(b, by="k").rowwise().add_columns(
+        rn=lambda e: e.row_number(), cs=lambda e: e.cumsum("w"))
+    got = sorted((r["w"], r["rn"], r["cs"]) for r in out.sdf.collect())
+    assert got == [(5, 1, 5), (6, 1, 6)]
+
+
 def test_distinct_keep_first_dotted_names(spark):
     # join suffixes produce dotted names (.x/.y) — distinct must
     # backtick-quote them in the keep-first aggregate
