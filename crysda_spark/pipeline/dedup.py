@@ -153,6 +153,14 @@ def _band_hashes(sig: str, n_hashes: int, bands: int) -> Column:
     return F.expr("array(" + ", ".join(bands_sql) + ")")
 
 
+def _banded(sig: DataFrame, n_hashes: int, bands: int, *cols) -> DataFrame:
+    """(*cols, band_id, band_hash): one row per band of every signature
+    in the ``sig`` column; null signatures are skipped."""
+    return (sig.filter(~F.element_at("sig", 1).isNull())
+            .select(*cols, F.posexplode(_band_hashes("sig", n_hashes, bands))
+                    .alias("band_id", "band_hash")))
+
+
 def _lsh_candidates_from_sig(sig: DataFrame, id_col: str,
                              n_hashes: int, bands: int) -> DataFrame:
     """(id_a, id_b) candidate pairs from a signature table: docs sharing
@@ -160,10 +168,7 @@ def _lsh_candidates_from_sig(sig: DataFrame, id_col: str,
     n_bands rows per doc — then self-join on the band key. The join key
     space is huge (64-bit hashes) so buckets stay tiny and the join
     never degenerates; dedup of pairs happens before verification."""
-    banded = pin(sig
-                 .filter(~F.element_at("sig", 1).isNull())
-                 .select(id_col, F.posexplode(_band_hashes("sig", n_hashes, bands))
-                         .alias("band_id", "band_hash")))
+    banded = pin(_banded(sig, n_hashes, bands, id_col))
     a = banded.alias("a")
     b = banded.alias("b")
     return (a.join(b, on=["band_id", "band_hash"], how="inner")
@@ -178,6 +183,21 @@ def minhash_lsh_candidates(f: Frame, text_col: str, id_col: str,
     band of the minhash signature. Returns (id_a, id_b) with id_a < id_b."""
     sig = minhash_signatures(f, text_col, id_col, n_hashes, k)
     return Frame(_lsh_candidates_from_sig(sig, id_col, n_hashes, bands))
+
+
+def _verified_pairs(sh: DataFrame, sig: DataFrame, id_col: str,
+                    threshold: float, n_hashes: int, bands: int) -> DataFrame:
+    """(id_a, id_b, jaccard): LSH candidates of the signature table
+    ``sig`` that verify at exact Jaccard >= ``threshold`` over the
+    shingle table ``sh`` (id, sh) — the one candidate → verify block
+    behind ``minhash_dedup`` and the dedup pipeline's in-batch stage."""
+    cands = _lsh_candidates_from_sig(sig, id_col, n_hashes, bands)
+    return (cands
+            .join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), on="id_a")
+            .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), on="id_b")
+            .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
 
 
 def minhash_dedup(f: Frame, text_col: str, id_col: str, threshold: float = 0.8,
@@ -196,22 +216,7 @@ def minhash_dedup(f: Frame, text_col: str, id_col: str, threshold: float = 0.8,
     sessions don't accumulate pinned storage."""
     sh = pin(shingled(f, text_col, id_col, k))
     sig = minhash_signatures_from_shingles(sh, id_col, n_hashes)
-    cands = _lsh_candidates_from_sig(sig, id_col, n_hashes, bands)
-    out = (cands
-           .join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), on="id_a")
-           .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), on="id_b")
-           .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-           .filter(F.col("jaccard") >= threshold)
-           .select("id_a", "id_b", "jaccard"))
-    return Frame(out)
-
-
-def ngram_jaccard_pairs(f: Frame, text_col: str, id_col: str,
-                        threshold: float = 0.5, k: int = 3,
-                        prefilter_bands: int = 8) -> Frame:
-    """Exact n-gram Jaccard similarity over LSH-prefiltered candidates."""
-    return minhash_dedup(f, text_col, id_col, threshold,
-                         n_hashes=32, bands=prefilter_bands, k=k)
+    return Frame(_verified_pairs(sh, sig, id_col, threshold, n_hashes, bands))
 
 
 def ngram_jaccard_exact(f: Frame, text_col: str, id_col: str,
@@ -545,32 +550,87 @@ def dedup_assignments(f: Frame, pairs: DataFrame, id_col: str) -> Frame:
     return Frame(out)
 
 
-def _dedup_full_stages(f: Frame, text_col: str, id_col: str, threshold: float,
-                       n_hashes: int, bands: int, k: int
-                       ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared stages 1-2 of the production dedup pipeline: returns
-    ``(fp_rows, canon, pairs)`` —
+def _dedup_stages(f: Frame, index: DataFrame | None, text_col: str,
+                  id_col: str, threshold: float, n_hashes: int, bands: int,
+                  k: int) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The one dedup pipeline behind ``dedup_full``,
+    ``dedup_full_assignments`` (``index`` None) and
+    ``dedup_incremental``. Returns ``(rows, surv, sigs)``:
 
-    - ``fp_rows`` (id, _fp): per-row md5 fingerprint (16-byte digest,
-      never the text, crosses every shuffle below);
-    - ``canon`` (_fp, id, _n_exact): one canonical min-id row per
-      fingerprint with its exact-copy count (pinned — feeds both the
-      near-dup stage and the caller's fold-back);
-    - ``pairs`` (id_a, id_b, jaccard): near-dup pairs over CANONICAL
-      docs only (the exact collapse has already removed the
-      O(copies²) hot-bucket mass)."""
+    - ``rows`` (id, text, _fp): every input row with its md5
+      fingerprint (a 16-byte digest — text never crosses a shuffle
+      below);
+    - ``surv`` (_fp, _bcid, _n, _surv, reason): one row per distinct
+      fingerprint — its canonical min id, its copy count, its final
+      survivor and why (``exact`` = hit an indexed fingerprint,
+      ``near``, ``unique``);
+    - ``sigs`` (id, sig): minhash signatures of the fresh canonical
+      docs (those not already in the index).
+
+    Stages: fingerprint → canonical min id + copy count per fingerprint
+    (before LSH — ``dedup_full`` says why) → with an index, exact
+    hits; the misses are fresh → shingle the fresh canonical docs once
+    (the shingles feed both signatures and the exact-Jaccard verify) →
+    with an index, band-join against the indexed signatures and verify
+    on the minhash estimate (the index keeps signatures, not text) →
+    in-batch LSH candidates of the rest, exact-Jaccard verified, into
+    ``connected_components`` → survivor = indexed survivor, else
+    near-matched indexed survivor, else component label (min member
+    id), else the canonical itself.
+
+    Pins the canonical table, the shingles, the LSH band table and
+    ``surv`` (with an index also the index and the near-vs-index
+    matches): the returned frames are lazy and still read them, so
+    callers ``release_pinned()`` after consuming. ``rows`` (a
+    projection of the input) and ``sigs`` (one aggregate over the
+    pinned shingles) stay unpinned: recomputing them is cheaper than a
+    cache round trip at batch sizes."""
     from .text import fingerprint
-    fp_rows = f.sdf.select(F.col(id_col), fingerprint(text_col).alias("_fp"))
-    canon = pin(fp_rows.groupBy("_fp")
-                .agg(F.min(id_col).alias(id_col),
-                     F.count(F.lit(1)).alias("_n_exact")))
-    # near-dup pairs over canonical docs only (text fetched by joining
-    # canonical ids back to the corpus — a semi-shaped join)
-    canon_docs = Frame(f.sdf.select(id_col, text_col)
-                       .join(canon.select(id_col), on=id_col, how="inner"))
-    pairs = minhash_dedup(canon_docs, text_col, id_col, threshold,
-                          n_hashes, bands, k).sdf
-    return fp_rows, canon, pairs
+    rows = f.sdf.select(F.col(id_col), F.col(text_col),
+                        fingerprint(text_col).alias("_fp"))
+    canon = pin(rows.groupBy("_fp")
+                .agg(F.min(id_col).alias("_bcid"),
+                     F.count(F.lit(1)).alias("_n")))
+    if index is None:  # no exact or near hits to resolve against
+        canon = canon.withColumns({"_old": F.lit(None), "_near": F.lit(None)})
+    else:
+        idx = pin(index)
+        canon = canon.join(idx.select("_fp", F.col("survivor_id").alias("_old")),
+                           on="_fp", how="left")
+    fresh = canon.filter(F.col("_old").isNull()).select(F.col("_bcid").alias(id_col))
+    sh = pin(shingled(Frame(rows.join(fresh, on=id_col).select(id_col, text_col)),
+                      text_col, id_col, k))
+    sigs = minhash_signatures_from_shingles(sh, id_col, n_hashes)
+    rest = sigs
+    if index is not None:
+        old_cand = (_banded(sigs, n_hashes, bands, id_col)
+                    .join(_banded(idx, n_hashes, bands,
+                                  F.col("survivor_id").alias("_old_surv"),
+                                  F.col("sig").alias("_old_sig")),
+                          on=["band_id", "band_hash"])
+                    .select(id_col, "_old_surv", "_old_sig")
+                    .dropDuplicates([id_col, "_old_surv"]))
+        # pinned: the anti-join and the survivor join both read it;
+        # unpinned, the r11 sf1 rehearsal ran the band join 3x
+        old_match = pin(old_cand.join(sigs, on=id_col)
+                        .filter(_sig_jaccard(F.col("sig"), F.col("_old_sig"),
+                                             n_hashes) >= threshold)
+                        .groupBy(F.col(id_col).alias("_bcid"))
+                        .agg(F.min("_old_surv").alias("_near")))
+        rest = sigs.join(old_match.select(F.col("_bcid").alias(id_col)),
+                         on=id_col, how="left_anti")
+        canon = canon.join(old_match, on="_bcid", how="left")
+    comps = connected_components(
+        _verified_pairs(sh, rest, id_col, threshold, n_hashes, bands))
+    surv = pin(canon.join(comps.withColumnRenamed("id", "_bcid"), on="_bcid",
+                          how="left")
+               .select("_fp", "_bcid", "_n",
+                       F.coalesce("_old", "_near", "comp", "_bcid").alias("_surv"),
+                       F.when(F.col("_old").isNotNull(), "exact")
+                       .when(F.col("_near").isNotNull()
+                             | (F.col("comp") != F.col("_bcid")), "near")
+                       .otherwise("unique").alias("reason")))
+    return rows, surv, sigs
 
 
 def dedup_full(f: Frame, text_col: str, id_col: str, threshold: float = 0.8,
@@ -588,28 +648,20 @@ def dedup_full(f: Frame, text_col: str, id_col: str, threshold: float = 0.8,
     pass by the duplicate factor, and leaves the band join operating on
     unique content only.
 
-    Pipeline: md5-fingerprint collapse (shuffles digests, never text) →
-    minhash+LSH+exact-Jaccard on canonical docs → connected components
-    → survivor = component label (the min member id); exact-copy mass
-    folds back via sum(n_exact) per component.
+    Pipeline: the stages of ``dedup_incremental`` without an index
+    (``_dedup_stages``: md5-fingerprint collapse → minhash+LSH+exact-
+    Jaccard on canonical docs → connected components), then the
+    canonical→survivor table's copy counts summed per survivor — at
+    canonical granularity, no per-row join.
 
     Returns (id, cluster_size): one row per surviving canonical
     document; cluster_size counts ALL original rows it absorbs (its
     exact copies + every near-dup member's exact copies); size 1 for
     unique singletons."""
-    _, canon, pairs = _dedup_full_stages(f, text_col, id_col, threshold,
-                                         n_hashes, bands, k)
-    # stage 3: components over canonical ids; fold exact mass back in.
-    # comp label = min reachable id, so the survivor IS the label.
-    comps = connected_components(pairs)
-    labeled = (canon.join(comps.withColumnRenamed("id", id_col), on=id_col,
-                          how="left")
-               .select(F.coalesce("comp", F.col(id_col)).alias("comp"),
-                       "_n_exact"))
-    out = (labeled.groupBy("comp")
-           .agg(F.sum("_n_exact").alias("cluster_size"))
-           .select(F.col("comp").alias(id_col), "cluster_size"))
-    return Frame(out)
+    _, surv, _ = _dedup_stages(f, None, text_col, id_col, threshold,
+                               n_hashes, bands, k)
+    return Frame(surv.groupBy(F.col("_surv").alias(id_col))
+                 .agg(F.sum("_n").alias("cluster_size")))
 
 
 def dedup_full_assignments(f: Frame, text_col: str, id_col: str,
@@ -617,31 +669,22 @@ def dedup_full_assignments(f: Frame, text_col: str, id_col: str,
                            bands: int = 8, k: int = 3) -> Frame:
     """Per-row ``(id, survivor_id, is_survivor)`` through the FULL
     production pipeline — the corpus-filtering companion to
-    ``dedup_full``. Where ``dedup_assignments`` maps rows→survivors
-    from a caller-supplied pair list, this routes every input row
-    through the exact-collapse stage first: exact copies map to their
-    fingerprint's canonical min-id row, canonicals map through the
-    near-dup components, and both hops compose so EVERY row of the
-    input lands on its final survivor. ``filter(is_survivor)``
-    reproduces ``dedup_full``'s survivor set exactly.
+    ``dedup_full``, over the same stages (``_dedup_stages`` without an
+    index). Where ``dedup_assignments`` maps rows→survivors from a
+    caller-supplied pair list, this routes every input row through the
+    exact-collapse stage first: each row joins its fingerprint's
+    canonical→survivor row, so exact copies, canonicals and near-dups
+    all land on the final survivor. ``filter(is_survivor)`` reproduces
+    ``dedup_full``'s survivor set exactly.
 
-    Scale shape: the row→canonical hop is an equi-join on the 16-byte
-    fingerprint (digests shuffle, text never does); the
-    canonical→survivor hop joins the (small, duplicate-population-
-    sized) component table — both unhinted, AQE picks broadcast vs
-    shuffle at runtime."""
-    fp_rows, canon, pairs = _dedup_full_stages(f, text_col, id_col, threshold,
-                                               n_hashes, bands, k)
-    comps = connected_components(pairs)
-    canon_surv = (canon.select("_fp", F.col(id_col).alias("_cid"))
-                  .join(comps.withColumnRenamed("id", "_cid"),
-                        on="_cid", how="left")
-                  .select("_fp",
-                          F.coalesce("comp", F.col("_cid")).alias("survivor_id")))
-    out = (fp_rows.join(canon_surv, on="_fp")
-           .select(F.col(id_col), "survivor_id",
-                   (F.col(id_col) == F.col("survivor_id")).alias("is_survivor")))
-    return Frame(out)
+    Scale shape: the row→survivor hop is an equi-join on the 16-byte
+    fingerprint (digests shuffle, text never does), unhinted — AQE
+    picks broadcast vs shuffle at runtime."""
+    rows, surv, _ = _dedup_stages(f, None, text_col, id_col, threshold,
+                                  n_hashes, bands, k)
+    return Frame(rows.join(surv, on="_fp")
+                 .select(F.col(id_col), F.col("_surv").alias("survivor_id"),
+                         (F.col(id_col) == F.col("_surv")).alias("is_survivor")))
 
 
 # ------------------------------------------------------- incremental dedup
@@ -654,11 +697,13 @@ def build_dedup_index(f: Frame, text_col: str, id_col: str,
     this index (16-byte digest + canonical id + its near-dup survivor
     + the n_hashes-long minhash signature ≈ 300 bytes/distinct doc —
     ~0.3 TB of state per billion docs, independent of document size)
-    and runs :func:`dedup_incremental` on each new batch. Here
-    ``survivor_id`` starts as the canonical id itself; feed the frame
-    through :func:`dedup_full_assignments` output (or merge the delta
-    rows returned by ``dedup_incremental``) to fold in near-dup
-    survivorship."""
+    and runs :func:`dedup_incremental` on each new batch. The rows are
+    the first stages of the dedup pipeline (fingerprint → canonical min
+    id per fingerprint → signatures of the canonical docs) with no
+    near-dup resolution: ``survivor_id`` is the canonical id itself.
+    Feed the frame through :func:`dedup_full_assignments` output (or
+    merge the delta rows returned by ``dedup_incremental``, whose
+    survivors are resolved) to fold in near-dup survivorship."""
     from .text import fingerprint
     fp_rows = f.sdf.select(F.col(id_col), fingerprint(text_col).alias("_fp"))
     canon = (fp_rows.groupBy("_fp")
@@ -703,6 +748,11 @@ def dedup_incremental(new: Frame, index: DataFrame, text_col: str,
       index for the next batch — the index grows only by genuinely
       novel content.
 
+    The stages are ``dedup_full``'s (``_dedup_stages``) plus the two
+    index probes: exact hits by fingerprint, and near hits by band-join
+    against the indexed signatures. Without an index the assignments
+    equal ``dedup_full_assignments``' survivor map.
+
     Verification difference vs the batch path, stated honestly: new-vs-
     OLD near-dups verify on the minhash ESTIMATE (the index stores
     signatures, not shingle sets — exact verification would require
@@ -718,128 +768,27 @@ def dedup_incremental(new: Frame, index: DataFrame, text_col: str,
     |index| rows, no shuffle) — persist a banded copy alongside the
     index if probing dominates.
 
-    Caching note (r12 advice — same contract as ``minhash_dedup`` /
-    ``merge_rollup``): this call PINS five batch-sized intermediates
-    (the fingerprinted batch, the index handle, the shingle
-    signatures, and the old-match / canonical-survivor stages) because
-    the returned frames are lazy and still reference them. They are
-    registered with the scoped cache registry — call
+    Caching note (same contract as ``minhash_dedup`` /
+    ``merge_rollup``): this call PINS six intermediates — the batch
+    canonical table, the index handle, the shingle table, the LSH band
+    table, the near-vs-index matches and the canonical→survivor table —
+    because the returned frames are lazy and still reference them.
+    They are registered with the scoped cache registry — call
     ``crysda_spark.plans.cache.release_pinned()`` after consuming each
     batch's results (bench.py does this between queries) so a
     long-lived ingestion session doesn't accumulate executor storage
     across batches."""
-    from .text import fingerprint
-    # pinned (not persist/unpersist inline): the returned frames are
-    # lazy and still reference these — callers release via
-    # release_pinned() after consuming, like every pipeline operator
-    new_rows = pin(new.sdf.select(F.col(id_col), F.col(text_col),
-                                  fingerprint(text_col).alias("_fp")))
-    idx = pin(index)
-
-    # 1. exact vs index + intra-batch exact collapse (one groupBy
-    #    handles both: the batch canonical is the min id per fp)
-    batch_canon = (new_rows.groupBy("_fp")
-                   .agg(F.min(id_col).alias("_bcid"),
-                        F.count(F.lit(1)).alias("_n")))
-    # old_match / canon_surv are each consumed by 2+ downstream
-    # branches; unpinned, every consumer re-ran the whole band-join
-    # pipeline above them (the r11 sf1 scale rehearsal measured it
-    # executing 3x: 42 s vs ~18 s of one-pass stage work — a 10.2x
-    # sf0.1->sf1 ratio where the other dedup pipelines scaled at
-    # 1.7-2.2x; pinned: 11 s, 1.4x). Both are batch-fp-sized, never
-    # corpus-sized. exact_hit also has two consumers but its recompute
-    # is one hash-agg + index probe over the pinned new_rows — cheaper
-    # than a cache round-trip at small batches and linear at scale.
-    exact_hit = batch_canon.join(idx.select("_fp", "survivor_id"),
-                                 on="_fp", how="left")
-    # fresh fps only continue to the near-dup stages
-    fresh = exact_hit.filter(F.col("survivor_id").isNull()) \
-        .select("_fp", "_bcid")
-    fresh_docs = Frame(new_rows.join(
-        fresh.select(F.col("_bcid").alias(id_col)), on=id_col, how="inner")
-        .select(id_col, text_col))
-
-    # 2. near vs index: band-join new signatures against index bands.
-    # The batch is shingled ONCE (pinned): the shingle table feeds the
-    # signature aggregate here AND stage 3's exact-Jaccard verify —
-    # r10 shape ran the whole shingle+signature pipeline twice (once
-    # here, once inside minhash_dedup), doubling the batch's text
-    # scans, explode shuffles, and Janino-compiled aggregate units.
-    sh = pin(shingled(fresh_docs, text_col, id_col, k))
-    sigs = pin(minhash_signatures_from_shingles(sh, id_col, n_hashes))
-    new_banded = (sigs.filter(~F.element_at("sig", 1).isNull())
-                  .select(id_col, F.posexplode(
-                      _band_hashes("sig", n_hashes, bands))
-                      .alias("_b", "_bh")))
-    idx_banded = (idx.filter(~F.element_at("sig", 1).isNull())
-                  .select(F.col("survivor_id").alias("_old_surv"),
-                          F.col("sig").alias("_old_sig"),
-                          F.posexplode(
-                              _band_hashes("sig", n_hashes, bands))
-                          .alias("_b", "_bh")))
-    old_cand = (new_banded.join(idx_banded, on=["_b", "_bh"])
-                .select(id_col, "_old_surv", "_old_sig")
-                .dropDuplicates([id_col, "_old_surv"]))
-    old_match = pin(old_cand.join(sigs, on=id_col)
-                    .withColumn("_est", _sig_jaccard(F.col("sig"),
-                                                     F.col("_old_sig"),
-                                                     n_hashes))
-                    .filter(F.col("_est") >= threshold)
-                    .groupBy(id_col)
-                    .agg(F.min("_old_surv").alias("_near_surv")))
-
-    # 3. near within the batch (exact-Jaccard verified, as dedup_full) —
-    # reusing the stage-2 shingles and signatures (identical values by
-    # construction: same docs, same hash family) instead of re-deriving
-    # them from text via minhash_dedup
-    still_sigs = (sigs.join(old_match.select(id_col), on=id_col,
-                            how="left_anti"))
-    cands = _lsh_candidates_from_sig(still_sigs, id_col, n_hashes, bands)
-    batch_pairs = (
-        cands
-        .join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}),
-              on="id_a")
-        .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}),
-              on="id_b")
-        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b"))
-    batch_comps = connected_components(batch_pairs)
-
-    # compose: batch row → batch canonical → (old survivor | batch
-    # component | itself)
-    canon_surv = pin(
-        fresh
-        .join(old_match.withColumnRenamed(id_col, "_bcid"),
-              on="_bcid", how="left")
-        .join(batch_comps.withColumnRenamed("id", "_bcid"),
-              on="_bcid", how="left")
-        .select("_fp", "_bcid",
-                F.coalesce("_near_surv", "comp", F.col("_bcid"))
-                .alias("_surv"),
-                F.when(F.col("_near_surv").isNotNull(), "near")
-                .when(F.col("comp").isNotNull()
-                      & (F.col("comp") != F.col("_bcid")), "near")
-                .otherwise("unique").alias("_canon_reason")))
-    fp_to_surv = (exact_hit.select("_fp", "_bcid",
-                                   F.col("survivor_id").alias("_old"))
-                  .join(canon_surv.select("_fp", "_surv", "_canon_reason"),
-                        on="_fp", how="left")
-                  .select("_fp", "_bcid",
-                          F.coalesce("_old", "_surv").alias("_final"),
-                          F.when(F.col("_old").isNotNull(), "exact")
-                          .otherwise(F.col("_canon_reason"))
-                          .alias("_fp_reason")))
-    assignments = (new_rows.join(fp_to_surv, on="_fp")
-                   .select(F.col(id_col),
-                           F.col("_final").alias("survivor_id"),
+    rows, surv, sigs = _dedup_stages(new, index, text_col, id_col, threshold,
+                                     n_hashes, bands, k)
+    assignments = (rows.join(surv, on="_fp")
+                   .select(F.col(id_col), F.col("_surv").alias("survivor_id"),
                            # a non-canonical exact copy within the batch
                            # is an exact dup even when its fp is fresh
                            F.when(F.col(id_col) != F.col("_bcid"), "exact")
-                           .otherwise(F.col("_fp_reason")).alias("reason")))
-
-    delta = (canon_surv.join(sigs.withColumnRenamed(id_col, "_bcid"),
-                             on="_bcid", how="left")
+                           .otherwise(F.col("reason")).alias("reason")))
+    delta = (surv.filter(F.col("reason") != "exact")
+             .join(sigs.withColumnRenamed(id_col, "_bcid"), on="_bcid",
+                   how="left")
              .select("_fp", F.col("_bcid").alias("id"),
                      F.col("_surv").alias("survivor_id"), "sig"))
     return Frame(assignments), delta

@@ -15,7 +15,7 @@ import sys
 sys.path.insert(0, "/root/repo/tools")
 
 from check_oracle import (  # noqa: E402
-    canon_cell, fragile_double_casts, hugeint_output_columns)
+    canon_cell, fragile_double_casts, hugeint_output_columns, rows_digest)
 
 
 def test_canon_cell_float_policy_is_10_sig_digits():
@@ -31,6 +31,17 @@ def test_canon_cell_float_policy_is_10_sig_digits():
     assert canon_cell(float("nan")) == "nan"
     assert canon_cell(None) == "NULL"
     assert canon_cell([1.0, None]) == "[f:1,NULL]"
+
+
+def test_rows_digest_ignores_row_order_not_bits():
+    # the parent-vs-change identity check diffs these digests, so they
+    # must not depend on row order and must see past-10-digit floats
+    rows = [(1, 1.00000000001, None), (2, 0.5, "x")]
+    assert rows_digest(["a", "b", "c"], rows) \
+        == rows_digest(["a", "b", "c"], rows[::-1])
+    assert rows_digest(["a", "b", "c"], rows) \
+        != rows_digest(["a", "b", "c"], [(1, 1.00000000002, None), rows[1]])
+    assert rows_digest(["a", "b", "c"], rows) != rows_digest(["a", "c", "b"], rows)
 
 
 def test_canary_flags_direct_hugeint_double_cast():

@@ -1125,6 +1125,52 @@ def test_dedup_incremental_matches_batch_on_clean_data(spark):
     idx.unpersist()
 
 
+def test_dedup_batch_path_equals_incremental_against_empty_index(spark):
+    """dedup_full / dedup_full_assignments run the incremental stages
+    without an index, so against an EMPTY index dedup_incremental must
+    give the same survivor map. Planted: exact copies, a near-dup chain
+    A~B~C whose ends do not verify directly (A~C is joined only through
+    connected components), an exact copy of a near-dup, and an
+    empty-text doc (shingle set {""})."""
+    from collections import Counter
+
+    from crysda_spark import from_records
+    from crysda_spark.plans.cache import release_pinned
+    words = [f"w{i}" for i in range(60)]
+    a = words
+    b = a[:20] + ["bx"] + a[21:]             # J(A,B) = 55/61 ~ 0.90
+    c = b[:40] + ["cx"] + b[41:]             # J(B,C) ~ 0.90, J(A,C) ~ 0.81
+    other = [f"o{i}" for i in range(30)]
+    recs = [(1, a, "unique"), (2, b, "near"), (3, c, "near"),
+            (4, b, "exact"),                 # exact copy of near-dup B
+            (5, other, "unique"), (6, other, "exact"), (7, other, "exact"),
+            (8, [], "unique"),               # empty text
+            (9, [f"u{i}" for i in range(25)], "unique")]
+    batch = from_records(spark, [{"id": i, "text": " ".join(t)}
+                                 for i, t, _ in recs])
+    kw = dict(threshold=0.85, n_hashes=32, bands=8)
+    full = {r.id: (r.survivor_id, r.is_survivor) for r in
+            dd.dedup_full_assignments(batch, "text", "id", **kw)
+            .sdf.collect()}
+    sizes = {r.id: r.cluster_size
+             for r in dd.dedup_full(batch, "text", "id", **kw).sdf.collect()}
+    empty = dd.build_dedup_index(
+        Frame(spark.createDataFrame([], "id long, text string")), "text", "id")
+    assigns, delta = dd.dedup_incremental(batch, empty, "text", "id", **kw)
+    inc = {r.id: (r.survivor_id, r.reason) for r in assigns.sdf.collect()}
+
+    assert {i: s for i, (s, _) in full.items()} \
+        == {i: s for i, (s, _) in inc.items()}
+    assert {i: s for i, (s, _) in inc.items()} == {
+        1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 5, 8: 8, 9: 9}
+    assert all(flag == (i == s) for i, (s, flag) in full.items())
+    assert sizes == Counter(s for s, _ in full.values())
+    assert {i: r for i, (_, r) in inc.items()} == {i: k for i, _, k in recs}
+    # every distinct fingerprint is new against an empty index
+    assert sorted(r.id for r in delta.collect()) == [1, 2, 3, 5, 8, 9]
+    release_pinned()
+
+
 # ------------------------------------------------------------- mix_corpus
 
 def test_mix_corpus_rates_and_copies(spark):

@@ -3,16 +3,23 @@ runs each __spark_entry__.queries() entry on Spark AND its oracle_sql()
 on DuckDB over the same parquet, compares row count, column names, and
 an order-insensitive canonicalized value multiset.
 
+Every PASS and rows-only line carries a short digest of the query's
+sorted raw rows, so a run from another checkout of this repository
+compares rows bit for bit by diffing the two outputs.
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
 import decimal
+import hashlib
 import math
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever one is installed
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb
 
@@ -137,6 +144,16 @@ def canon_rows(cols, rows):
     return sorted("|".join(canon_cell(r[i]) for i in order) for r in rows)
 
 
+def rows_digest(cols, rows) -> str:
+    """12 hex digits of sha256 over the column names and the sorted
+    ``repr`` of every raw row — no float canonicalization, so equal
+    digests mean bit-equal results (row order aside)."""
+    h = hashlib.sha256(repr(list(cols)).encode())
+    for r in sorted(map(repr, rows)):
+        h.update(r.encode())
+    return h.hexdigest()[:12]
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -212,7 +229,8 @@ def main():
             n_fail += 1
             continue
         if name not in oracles:
-            print(f"rows  {name}: {len(srows)} rows (no oracle)")
+            print(f"rows  {name}: {len(srows)} rows (no oracle) "
+                  f"{rows_digest(scols, srows)}")
             n_rowsonly += 1
             continue
         try:
@@ -238,7 +256,8 @@ def main():
             print(f"FAIL  {name}: {'; '.join(problems)}")
             n_fail += 1
         else:
-            print(f"PASS  {name} ({len(srows)} rows)")
+            print(f"PASS  {name} ({len(srows)} rows) "
+                  f"{rows_digest(scols, srows)}")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail")
     sys.exit(1 if n_fail else 0)

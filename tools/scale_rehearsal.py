@@ -148,8 +148,7 @@ def main() -> None:
         return n
 
     def run_ngram_jaccard(d):
-        out = dd.ngram_jaccard_pairs(docs(d), "text", "doc_id",
-                                     threshold=0.5)
+        out = dd.minhash_dedup(docs(d), "text", "doc_id", threshold=0.5)
         return out.sdf.count()
 
     def run_semantic_dedup(d):
