@@ -4628,8 +4628,8 @@ def dupspan_incremental_stats(spark, sf_dir):
         # recompute (11.7-22 s vs ~3 s at sf0.01, both variants timed).
         # The O(1)-cache release pattern the r14 advice asked for is
         # for UNBOUNDED accretion loops that fully consume each round's
-        # output before merging — see tools/dupspan_inc_rehearsal.py
-        # and the streaming sink, which use it.
+        # output before merging — the streaming sink's per-batch pin
+        # scope is that pattern.
         idx = Frame(pin(merge_dupspan_index(idx, delta).sdf))
     return outs
 

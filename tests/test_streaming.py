@@ -8,6 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from crysda_spark.streaming import cdc
 from crysda_spark.streaming import windows as sw
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -663,16 +664,16 @@ def test_tumbling_rollup_ksample_matches_batch(spark, events_stream_dir):
 
 def test_replay_guard_helpers_distinguish_replay_from_restart(spark,
                                                               tmp_path):
-    """The shared accreting-sink guard (r14): _replay_state fires only
-    for the SAME (batch id, content fingerprint) pair the manifest
-    recorded — a checkpointless restart reusing batch id 0 for new
-    rows must take the normal path, and older-manifest formats (plain
-    side) never read as a replay."""
+    """The shared accreting-sink guard: _accrete treats a batch as
+    a replay only for the SAME (batch id, content fingerprint) pair the
+    manifest recorded, and then hands the fold the PRE-flip side and no
+    write side — a checkpointless restart reusing batch id 0 for new
+    rows must take the normal path."""
     import os
-    from crysda_spark.streaming.cdc import (_batch_fingerprint,
+    from crysda_spark.streaming.cdc import (_accrete,
+                                            _batch_fingerprint,
                                             _commit_flip,
-                                            _manifest_state,
-                                            _replay_state)
+                                            _manifest_state)
     idx = str(tmp_path / "index")
     os.makedirs(os.path.join(idx, "b"))
     spark.createDataFrame([(1, 10)], "id long, v long") \
@@ -684,32 +685,39 @@ def test_replay_guard_helpers_distinguish_replay_from_restart(spark,
     assert fp == _batch_fingerprint(
         spark.createDataFrame([(2, "y"), (1, "x")],
                               "id long, text string"), "id", "text")
-    other = _batch_fingerprint(
-        spark.createDataFrame([(1, "x"), (3, "z")],
-                              "id long, text string"), "id", "text")
+    b_other = spark.createDataFrame([(1, "x"), (3, "z")],
+                                    "id long, text string")
+    other = _batch_fingerprint(b_other, "id", "text")
     assert other != fp
+
+    def guard(batch, batch_id):
+        """(replay, pre-flip side or None) as the fold sees them,
+        against a manifest that records batch 0's flip to side 'a'."""
+        seen = []
+        _accrete(batch, batch_id, idx, ("id", "text"),
+                 lambda _b, _i, read_dir, write_dir:
+                 seen.append((read_dir, write_dir)))
+        (read_dir, write_dir), = seen
+        _commit_flip(idx, "a", 0, fp)
+        if write_dir is not None:
+            return False, None
+        return True, (spark.read.parquet(read_dir) if read_dir else None)
+
     # no manifest yet -> never a replay
-    assert _replay_state(spark, idx, 0, fp) == (False, None)
-    _commit_flip(idx, "a", 0, fp)
+    assert guard(b0, 0) == (False, None)
     assert _manifest_state(idx) == ("a", 0, fp)
     # true replay: same id AND same content -> pre-flip side ('b')
-    replay, pre = _replay_state(spark, idx, 0, fp)
+    replay, pre = guard(b0, 0)
     assert replay and pre is not None and pre.count() == 1
     # restart with NEW content under the same id -> normal path
-    assert _replay_state(spark, idx, 0, other) == (False, None)
+    assert guard(b_other, 0) == (False, None)
     # different id -> normal path
-    assert _replay_state(spark, idx, 1, fp) == (False, None)
-    # legacy plain manifest (other sinks' old state dirs) -> no replay,
-    # and (r15, closing the r14 advice) a LOUD warning that replay
-    # protection only resumes after the next committed flip
-    import warnings
+    assert guard(b0, 1) == (False, None)
+    # a plain manifest (the upsert sink's) never reads as a replay
     with open(os.path.join(idx, "MANIFEST"), "w") as fh:
         fh.write("a")
     assert _manifest_state(idx) == ("a", None, None)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        assert _replay_state(spark, idx, 0, fp) == (False, None)
-    assert any("legacy A/B manifest" in str(w.message) for w in caught)
+    assert guard(b0, 0) == (False, None)
 
 
 def test_batch_fingerprint_is_multiplicity_sensitive(spark):
@@ -736,8 +744,8 @@ def test_stream_bm25_index_accretes_and_serves_exact_scores(spark,
                                                             tmp_path):
     """r15 BM25 accreting sink: after two micro-batches the committed
     snapshot must serve scores bit-identical to an inline bm25_search
-    over everything ingested; a replayed batch (same id + fingerprint)
-    is a no-op on the state."""
+    over everything ingested, and the manifest must record the last
+    batch's (id, fingerprint)."""
     import os
     from crysda_spark.pipeline import text as tx
     from crysda_spark.streaming.cdc import (_manifest_state,
@@ -773,16 +781,14 @@ def test_stream_bm25_index_accretes_and_serves_exact_scores(spark,
             for r in tx.bm25_search(full, "text", "doc_id", terms,
                                     k=10).collect()]
     assert got == want and len(got) > 0
-    # replay-after-flip is a no-op: same manifest, same stats row
-    side0, bid0, fp0 = _manifest_state(os.path.join(state, "index"))
+    # the manifest records the last batch's (id, fingerprint) — the
+    # pair a replay is matched on; the replay itself is driven in
+    # test_accreting_sink_replay_restart_and_empty_batch
+    _side, bid0, fp0 = _manifest_state(os.path.join(state, "index"))
     from crysda_spark.streaming import cdc as cdcmod
     batch2 = spark.createDataFrame(rows2, "doc_id long, text string")
     fp_b2 = cdcmod._batch_fingerprint(batch2, "doc_id", "text")
     assert (bid0, fp0) == (1, fp_b2)
-    # a replay is detected purely from (batch_id, fingerprint), so the
-    # guard condition is assertable directly against the manifest
-    side1, bid1, fp1 = _manifest_state(os.path.join(state, "index"))
-    assert (side1, bid1, fp1) == (side0, bid0, fp0)
     s_row = stats.sdf.collect()[0]
     assert s_row["n_docs"] == 4 and s_row["sum_dl"] == 14
 
@@ -847,3 +853,148 @@ def test_stream_ngram_model_accretes_and_serves_exact_scores(spark,
     # the committed state is untouched by the failed flip
     g2, v2, s2 = read_ngram_model_snapshot(spark, state)
     assert s2.sdf.collect() == [srow]
+
+
+# ---------------------------------------------- accreting-sink replay
+class _CaptureStream:
+    """Stands in for a streaming DataFrame: a sink started on it hands
+    its foreachBatch body to the test instead of to Spark."""
+
+    def __init__(self, spark):
+        self.sparkSession = spark
+        self.apply_batch = None
+
+    @property
+    def writeStream(self):
+        return self
+
+    def foreachBatch(self, fn):
+        self.apply_batch = fn
+        return self
+
+    def outputMode(self, _mode):
+        return self
+
+    def option(self, *_kv):
+        return self
+
+    def start(self):
+        return None
+
+
+_DOC = "doc_id long, text string"
+_BLOCK = "QWERTYUIOPASDFGHJKLZ"
+
+
+def _image_rows(*id_seeds):
+    import numpy as np
+    from crysda_spark.pipeline.codecs import encode_bmp
+    return [(i, bytearray(encode_bmp(
+        (np.random.RandomState(s).rand(48, 64, 3) * 255).astype(np.uint8))))
+        for i, s in id_seeds]
+
+
+# sink -> (start(stream, path), schema, [batch 0, batch 1, NEW rows
+# under id 1], state subdir, state tables per side, per-batch output)
+_ACCRETING_SINKS = {
+    "dedup": (
+        lambda s, p: cdc.stream_dedup_incremental(
+            s, p, "text", "doc_id", threshold=0.6),
+        _DOC,
+        [[(0, "the quick brown fox jumps over the lazy dog near the "
+              "river bank every single morning"),
+          (1, "completely different content about database engines "
+              "and distributed query planning")],
+         [(10, "the quick brown fox jumps over the lazy dog near the "
+               "river bank every single morning"),
+          (11, "seventeen purple submarines play jazz music today")],
+         [(20, "an entirely novel text about mountain goats climbing "
+               "steep granite cliffs")]],
+        "index", [""], "assignments"),
+    "dupspan": (
+        lambda s, p: cdc.stream_dupspan_dedup(
+            s, p, "text", "doc_id", min_len=20),
+        _DOC,
+        [[(1, "aaaa-bbbb." + _BLOCK + ",cccc+dddd")],
+         [(2, "eeee;ffff!" + _BLOCK + "?hhhh")],
+         [(3, "iiii:jjjj(" + _BLOCK + ")kkkk")]],
+        "index", [""], "cleaned"),
+    "image": (
+        lambda s, p: cdc.stream_image_dedup(
+            s, p, max_hamming=7, n_bands=8),
+        "id long, payload binary",
+        [_image_rows((1, 71), (2, 72)), _image_rows((10, 71), (11, 73)),
+         _image_rows((20, 99))],
+        "index", [""], "assignments"),
+    "bm25": (
+        lambda s, p: cdc.stream_bm25_index(s, p, "text", "doc_id"),
+        _DOC,
+        [[(1, "fast scan fast table"), (2, "table scan merge join")],
+         [(3, "slow vector join join join")],
+         [(4, "brand new words here")]],
+        "index", ["postings", "stats"], None),
+    "ngram": (
+        lambda s, p: cdc.stream_ngram_model(
+            s, p, "text", "doc_id", order=2),
+        _DOC,
+        [[(1, "a b c d")], [(2, "a b c e")], [(3, "x y z w")]],
+        "model", ["grams", "vocab", "stats"], None),
+}
+
+
+@pytest.mark.parametrize("sink", sorted(_ACCRETING_SINKS))
+def test_accreting_sink_replay_restart_and_empty_batch(spark, tmp_path,
+                                                       sink):
+    """Every accreting sink under the shared exactly-once contract,
+    driven through its own foreachBatch body: a replay of the last
+    batch (same id, same rows) leaves manifest, state and per-batch
+    output unchanged; NEW rows under the same id (a checkpointless
+    restart) are merged; an empty batch writes nothing and does not
+    flip."""
+    from crysda_spark.plans.cache import release_pinned
+    start, schema, batches, state, tables, out = _ACCRETING_SINKS[sink]
+    path = str(tmp_path / sink)
+    stream = _CaptureStream(spark)
+    start(stream, path)
+    idx_dir = os.path.join(path, state)
+
+    def run(rows, batch_id):
+        stream.apply_batch(spark.createDataFrame(rows, schema), batch_id)
+
+    def rows_of(p):
+        return sorted(map(repr, spark.read.parquet(p).collect()))
+
+    def snap():
+        man = cdc._manifest_state(idx_dir)
+        side = os.path.join(idx_dir, man[0])
+        return (man, {t: rows_of(os.path.join(side, t)) for t in tables},
+                rows_of(os.path.join(path, out)) if out else None)
+
+    def files(root):
+        return sorted((os.path.relpath(os.path.join(d, f), root),
+                       os.stat(os.path.join(d, f)).st_mtime_ns)
+                      for d, _, fs in os.walk(root) for f in fs)
+
+    try:
+        run(batches[0], 0)
+        run(batches[1], 1)
+        before, state_files = snap(), files(idx_dir)
+        assert before[0][1] == 1
+        # replay of batch 1 after its flip committed
+        run(batches[1], 1)
+        assert snap() == before, "replay changed manifest, state or output"
+        assert files(idx_dir) == state_files, "replay wrote state"
+        # checkpointless restart: new rows under the already-flipped id
+        run(batches[2], 1)
+        after = snap()
+        side, bid, fp = after[0]
+        assert bid == 1 and side != before[0][0] and fp != before[0][2]
+        assert (sum(map(len, after[1].values()))
+                > sum(map(len, before[1].values()))), "new rows not merged"
+        # an empty batch: nothing written, no flip
+        everything = files(path)
+        run([], 2)
+        assert files(path) == everything
+        assert cdc._manifest_state(idx_dir) == after[0]
+    finally:
+        release_pinned()

@@ -1,4 +1,4 @@
-"""Compare two bench JSON artifacts (BENCH_r*.json / BENCH_LOCAL.json):
+"""Compare two bench.py JSON artifacts (e.g. BENCH_LOCAL.json):
 per-query ratios over the common query set, slowest entries, and a
 noise-aware regression list (host noise on this box runs ~1.3-1.4x on
 untouched sub-second queries — see NOTES_r06 — so the default flag

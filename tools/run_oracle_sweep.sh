@@ -3,9 +3,11 @@
 # tools/check_oracle.py at both SFs through a progress-bar-stripping
 # filter and REFUSES to emit an artifact whose per-line listing does
 # not sum to its own summary line — an evidence file should audit
-# itself. Usage: tools/run_oracle_sweep.sh [out_file]
+# itself. Usage: tools/run_oracle_sweep.sh [out_file] — the artifact goes
+# to out_file, or to stdout when none is given; the integrity report
+# goes to stderr.
 set -euo pipefail
-out="${1:-ORACLE_SWEEP_r15.txt}"
+out="${1:-}"
 tmp=$(mktemp)
 fail=0
 for sf in /root/testdata/sf0.01 /root/testdata/sf0.1; do
@@ -15,7 +17,7 @@ for sf in /root/testdata/sf0.01 /root/testdata/sf0.1; do
     echo >> "$tmp"
 done
 # integrity: per-SF PASS/rows counts must equal the summary claims
-python - "$tmp" <<'PY'
+python - "$tmp" >&2 <<'PY'
 import re, sys
 text = open(sys.argv[1]).read()
 for block in text.split("=== sweep @ ")[1:]:
@@ -31,6 +33,11 @@ for block in text.split("=== sweep @ ")[1:]:
                          "artifact eats its own lines")
     print(f"{head}: listing == summary == {want}")
 PY
-mv "$tmp" "$out"
-echo "wrote $out"
+if [ -n "$out" ]; then
+    mv "$tmp" "$out"
+    echo "wrote $out" >&2
+else
+    cat "$tmp"
+    rm -f "$tmp"
+fi
 exit $fail
